@@ -67,7 +67,14 @@ def _quality_and_split(reps: DataFrame, id_col: str, text_col: str,
     """Steps 2-3 of the curation contract (shared by the exact, fuzzy
     and web front ends): token floor + repetition ceiling computed on
     ``text_col``, then the deterministic content-addressed split keyed
-    on ``split_col`` (defaults to ``text_col``)."""
+    on ``split_col`` (defaults to ``text_col``).
+
+    ``materialize`` (None = auto via ``_is_big``) cuts the plan after
+    the token count.  Without the cut the survivor frame's upstream
+    executes once per consumer, so the two sides of the self-join agree
+    only if that upstream is deterministic (unique ids for min_by,
+    deterministic LSH canonicals): a sampled or otherwise
+    non-deterministic ``reps`` must pass ``materialize=True``."""
     from .dedup import _is_big
 
     # materialize ONCE when the frame is worth it: the survivor frame

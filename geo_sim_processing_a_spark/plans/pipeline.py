@@ -2,13 +2,13 @@
 
   SCAN pages → PREP (text extract P9, dedup, geocode P10)
   → TILE (cell encode X6, halo cover X7) → SALT (X11)
-  → KERNEL (groupBy(cell,salt).applyInPandas(reduce_bend | dp | vw))
+  → KERNEL (repartition(cell, salt).mapInPandas(reduce_bend | dp | vw))
   → CHECKPOINT (output parquet + lineage manifest S7) → RESUME
 
 All geometry math is inside Arrow-batched kernels; everything else is
-whole-stage-codegen Spark SQL.  The kernel stage shuffles exactly once
-(the salted repartition doubles as the groupBy's required hashing via
-the same keys).
+whole-stage-codegen Spark SQL.  The kernel stage shuffles exactly once:
+one hash repartition on (cell, salt) puts every tile wholly in one
+partition, and mapInPandas carves the sorted partition into tiles.
 """
 
 from __future__ import annotations
@@ -301,11 +301,13 @@ def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
                    flag_del_inner: bool = False) -> DataFrame:
     """Per-tile kernels over halo-complete tiles.
 
-    Tiles are BUCKETED before applyInPandas: one Spark group holds many
-    (cell, salt) tiles and the kernel iterates them as numpy slices —
-    per-group Arrow/pandas overhead is paid per bucket, not per tile.
-    Tile semantics are unchanged: each (cell, salt) subgroup is
-    processed independently, owners only are emitted."""
+    One (cell, salt) hash repartition into ``n_buckets`` partitions,
+    sorted within each, feeds one mapInPandas: every partition holds
+    many whole tiles, and the kernel carves them from the Arrow batches
+    and iterates them as numpy slices — per-task Arrow/pandas overhead
+    is paid per bucket, not per tile.  Tile semantics are unchanged:
+    each (cell, salt) tile is processed independently, owners only are
+    emitted."""
     if kernel == "sherbend":
         def bucket_fn(pdf):
             return _reduce_bend_kernel(pdf, diameter_tol, smooth, epsilon=epsilon,

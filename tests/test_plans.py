@@ -200,10 +200,12 @@ def test_contamination_broadcasts_probe_grams(spark):
 def test_curation_udf_free_mapside_dedup(spark):
     """The whole curation composition stays JVM-side, and the exact
     dedup is a partial-aggregated min_by (map-side combine), not a
-    window sort over every row.  Since r6 the composition cuts its
-    plan at reuse points (localCheckpoint — one execution per shared
-    subtree), so the min_by assertion runs on the dedup stage's own
-    plan; the composition plan is checked UDF/Window-free."""
+    window sort over every row.  The min_by assertion runs on the dedup
+    stage's own plan, since the composition may cut its plan at reuse
+    points (localCheckpoint): the fuzzy/web paths cut only when
+    ``_is_big`` says the survivor frame is big, the exact path of
+    q_curation never cuts.  The composition plan is checked
+    UDF/Window-free."""
     from geo_sim_processing_a_spark.operators.curation import dedup_reps
     from geo_sim_processing_a_spark.plans.driver_queries import q_curation
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
