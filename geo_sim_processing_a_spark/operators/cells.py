@@ -110,28 +110,6 @@ def children(cell) -> np.ndarray:
     return ((base << np.uint64(5)) | (res + 1).astype(np.uint64)[..., None]).astype(np.int64)
 
 
-def neighbors(cell) -> np.ndarray:
-    """8-neighborhood (ring-1) of each cell, shape (..., 8); x wraps
-    (longitude), y clips at the poles (missing neighbors repeat the
-    cell itself so the output arity is fixed for explode())."""
-    ix, iy, res = decode(cell)
-    n = np.int64(1) << res
-    out = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            if dx == 0 and dy == 0:
-                continue
-            nx = np.mod(ix + dx, n)
-            ny = iy + dy
-            valid = (ny >= 0) & (ny < n)
-            ny = np.clip(ny, 0, n - 1)
-            cand = encode_ixiy(nx, ny, 0) & ~np.int64(0x1F)
-            # resolution varies per element: rebuild with res bits
-            cand = cand | res
-            out.append(np.where(valid, cand, np.asarray(cell, dtype=np.int64)))
-    return np.stack(out, axis=-1)
-
-
 def cover_bbox(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:
     """All cells at ``res`` overlapping the bbox (lon/lat degrees)."""
     n = np.int64(1) << np.int64(res)

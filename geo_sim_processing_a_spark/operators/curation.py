@@ -43,7 +43,9 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     # Exchange-topped, so AQE ReusedExchange already shares the dedup
     # shuffle between the two consumers in _quality_and_split and a
     # checkpoint only buys blocked column pruning (A/B at sf0.1 AND a
-    # 10x corpus: no-cut 1.42/3.83 s vs cut 1.59/4.26 s, count sink)
+    # 10x corpus: no-cut 1.42/3.83 s vs cut 1.59/4.26 s, count sink).
+    # The reuse is plan-gated on the executed plan:
+    # tests/test_plans.py::test_curation_exact_path_reuses_dedup_exchange
     return _quality_and_split(reps, id_col, text_col, min_tokens,
                               max_top_share, ngram_n, materialize=False)
 

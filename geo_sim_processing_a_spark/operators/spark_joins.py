@@ -1,14 +1,22 @@
 """DataFrame-level spatial joins (SURVEY.md X8/X9) — filter-refine:
-coarse Catalyst hash-join on cell, exact NumPy refine per group.
+coarse Catalyst hash-join on a grid cell, exact refine per candidate.
+Every cell key is computed JVM-side (cell_encode_col / _grid_index_col,
+bit-twins of operators/cells.py); Python runs only where the refine or
+the exact polygon cover needs NumPy.
 
 X8 broadcast point-in-polygon join:
-    polygons -> cover cells (tiny dim side) -> broadcast
-    points   -> cell                       -> equi-join -> PIP refine
+    polygons -> exact cover cells (tiny dim side, NumPy) -> broadcast
+    points   -> Morton cell (JVM)                        -> equi-join
+             -> PIP refine (NumPy)
 X9 cell-local kNN:
-    candidates replicated to their cell's ring-1 neighborhood via
-    explode; queries keep their own cell; groupBy(cell) brute-force
-    refine (exact within cell+ring1 — callers pick the resolution so
-    the k-th neighbor distance < one cell size).
+    points keyed on their raw grid cell (ix, iy); candidates replicated
+    to the ring-1 neighborhood by a 9-offset explode; queries and
+    candidates cogrouped on that cell into a brute-force NumPy refine
+    (exact within cell+ring1 — callers pick the resolution so the k-th
+    neighbor distance < one cell size).
+Extended geometries (range_join, diamond_join, segment_join):
+    one primitive, _grid_join — bbox cover into (ix, iy) cells, equi-join,
+    bbox prefilter, reference-point dedup, Column refine; no Python.
 """
 
 from __future__ import annotations
@@ -21,13 +29,6 @@ from pyspark.sql import types as T
 
 from . import cells as C
 from .spatial_join import knn_brute, pip_refine
-
-
-def encode_cell_udf(res: int):
-    @F.pandas_udf("long")
-    def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(C.encode(lon.to_numpy(), lat.to_numpy(), res))
-    return _enc
 
 
 from ..geom.primitives import split_rings as _split_rings  # shared decoder
@@ -72,14 +73,13 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 8) -> DataFrame:
     polygons (ring_offsets: exterior first, holes after) use even-odd
     semantics — points inside a hole do NOT match."""
     from .dedup import _ensure_parallelism_if_big
-    enc = encode_cell_udf(res)
     # size-conditional parallelism floor: a single-split point scan of
-    # a BIG table would run the cell-encode UDF (and the downstream
-    # refine feed) on one task; for a small one the fan-out exchange
-    # costs more than the light encode it parallelizes (count-sink A/B
-    # at sf0.1: 1.31 s floored vs 0.81 s not)
+    # a BIG table would feed the refine from one task; for a small one
+    # the fan-out exchange costs more than it parallelizes (count-sink
+    # A/B at sf0.1: 1.31 s floored vs 0.81 s not)
     pts = (_ensure_parallelism_if_big(points)
-           .withColumn("cell", enc("lon", "lat")))
+           .withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"),
+                                               res)))
     has_offsets = "ring_offsets" in polys.columns
 
     if has_offsets:
@@ -138,42 +138,19 @@ def range_join(left: DataFrame, right: DataFrame, res: int = 6,
                left_id: str = "a_id", right_id: str = "b_id") -> DataFrame:
     """Spatial RANGE JOIN: pairs whose bounding boxes intersect.
 
-    Scale shape (the classic grid partitioned spatial join):
-     - both sides are duplicated into every covered cell (halo cover,
-       same contract as the tile kernels);
-     - candidates come from an equi-join ON CELL ONLY — never a cross
-       join;
-     - the exact bbox-overlap test is four JVM comparisons;
-     - duplicates are eliminated by the REFERENCE-POINT rule (report a
-       pair only in the single cell containing the overlap region's
-       min corner) — dedup by construction, no distinct shuffle.
+    Scale shape: the grid partitioned spatial join (_grid_join) with
+    the bbox-overlap prefilter as the whole test — no refine, no
+    Python.  Each geometry is duplicated into every (ix, iy) cell its
+    bbox touches, candidates come from an equi-join on the cell (never
+    a cross join), and the reference-point rule reports each pair once.
 
     Inputs: (id, xs, ys[, ring_offsets]) geometry frames.  Returns
     (left_id, right_id)."""
-    def covered(df, id_col, prefix):
-        bb = df.select(
-            F.col(id_col),
-            F.array_min("xs").alias(f"{prefix}minx"),
-            F.array_min("ys").alias(f"{prefix}miny"),
-            F.array_max("xs").alias(f"{prefix}maxx"),
-            F.array_max("ys").alias(f"{prefix}maxy"),
-            "xs", "ys")
-        from .tiling import with_cell_cover
-        return (with_cell_cover(bb, res)
-                .drop("xs", "ys", "is_owner"))
+    def side(df):
+        return df, (F.array_min("xs"), F.array_min("ys"),
+                    F.array_max("xs"), F.array_max("ys"))
 
-    la = covered(left, left_id, "a_")
-    rb = covered(right, right_id, "b_")
-    enc = encode_cell_udf(res)
-    rx = F.greatest("a_minx", "b_minx")
-    ry = F.greatest("a_miny", "b_miny")
-    return (la.join(rb, "cell")
-            .where((F.col("a_minx") <= F.col("b_maxx"))
-                   & (F.col("a_maxx") >= F.col("b_minx"))
-                   & (F.col("a_miny") <= F.col("b_maxy"))
-                   & (F.col("a_maxy") >= F.col("b_miny")))
-            .where(enc(rx, ry) == F.col("cell"))
-            .select(left_id, right_id))
+    return _grid_join(side(left), side(right), res, [left_id, right_id])
 
 
 def knn_join(points: DataFrame, k: int, res: int = 6,
@@ -199,29 +176,35 @@ def knn_join(points: DataFrame, k: int, res: int = 6,
     where cells outnumber cores — salting multiplies the candidate
     shuffle bytes by the salt count."""
     from .dedup import _ensure_parallelism_if_big
-    cell_w = 360.0 / (1 << res)
-    cell_h = 180.0 / (1 << res)
-    exact_radius2 = min(cell_w, cell_h) ** 2
-    enc = encode_cell_udf(res)
+    n = 1 << res
+    exact_radius2 = min(360.0 / n, 180.0 / n) ** 2
     # size-conditional parallelism floor: see pip_join
-    pts = (_ensure_parallelism_if_big(points)
-           .withColumn("cell", enc("lon", "lat")))
+    queries = (_ensure_parallelism_if_big(points)
+               .select("pid", "lon", "lat",
+                       _ix_col(F.col("lon"), res).alias("ix"),
+                       _iy_col(F.col("lat"), res).alias("iy")))
+    # ring-1: each candidate goes to its own cell and the 8 around it;
+    # ix wraps at the antimeridian, rows past a pole drop.  At res <= 1
+    # the wrap sends two offsets to one cell — the refine drops the
+    # repeated candidate
+    ring1 = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+                      for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
+    cands = (queries.select(F.col("pid").alias("cid"),
+                            F.col("lon").alias("clon"),
+                            F.col("lat").alias("clat"),
+                            "ix", "iy", F.inline(ring1))
+             .select("cid", "clon", "clat",
+                     F.pmod(F.col("ix") + F.col("dx"), F.lit(n)).alias("ix"),
+                     (F.col("iy") + F.col("dy")).alias("iy"))
+             .where((F.col("iy") >= 0) & (F.col("iy") < n)))
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def nbrs_udf(cell: pd.Series) -> pd.Series:
-        # fully vectorized (n, 9) = [cell | ring-1] matrix; pole rows
-        # may repeat the cell itself (C.neighbors clips at the poles) —
-        # the refine stage drops duplicate candidates, so no per-row
-        # set/dedup loop is needed here
-        c = cell.to_numpy()
-        mat = np.concatenate([c[:, None], C.neighbors(c)], axis=1)
-        mat.sort(axis=1)
-        return pd.Series(mat.tolist())
+    # one long group key per row, (ix << res) | iy: a shuffled row
+    # carries 8 key bytes, as the Morton cell did, not 16 for (ix, iy)
+    def keyed(df):
+        cell = F.shiftleft("ix", res).bitwiseOR(F.col("iy"))
+        return df.withColumn("cell", cell).drop("ix", "iy")
 
-    cands = (pts.withColumn("cell", F.explode(nbrs_udf("cell")))
-             .select(F.col("pid").alias("cid"), F.col("lon").alias("clon"),
-                     F.col("lat").alias("clat"), "cell"))
-    queries = pts.select("pid", "lon", "lat", "cell")
+    queries, cands = keyed(queries), keyed(cands)
     keys = ["cell"]
     if n_query_salts > 1:
         keys = ["cell", "qsalt"]
@@ -243,7 +226,7 @@ def knn_join(points: DataFrame, k: int, res: int = 6,
                                  "neighbor_id": pd.Series([], dtype="int64"),
                                  "dist2": pd.Series([], dtype="float64"),
                                  "rank": pd.Series([], dtype="int32")})
-        c = c.drop_duplicates("cid")  # pole rows can repeat a neighbor cell
+        c = c.drop_duplicates("cid")  # res <= 1: the ix wrap repeats a cell
         cid = c["cid"].to_numpy()
         order, d2 = knn_brute(q["lon"].to_numpy(), q["lat"].to_numpy(),
                               c["clon"].to_numpy(), c["clat"].to_numpy(),
@@ -283,8 +266,8 @@ def knn_join(points: DataFrame, k: int, res: int = 6,
 
 
 # ---------------------------------------------------------------------------
-# Fully-JVM spatial join: Morton encode / bbox cover as Column
-# expressions + exact integer SAT refine (no Python anywhere).
+# Fully-JVM cell keys (Morton encode, raw grid index) as Column
+# expressions, the grid join, and its exact integer refines.
 # ---------------------------------------------------------------------------
 
 _SPREAD_STAGES = [(16, 281470681808895), (8, 71777214294589695),
@@ -309,6 +292,16 @@ def _grid_index_col(v, lo: float, extent: float, res: int):
                    F.lit(n - 1).cast("long"))
 
 
+def _ix_col(lon, res: int):
+    """Grid column of ``lon`` at ``res`` (cells.lonlat_to_ixiy's ix)."""
+    return _grid_index_col(lon, -180.0, 360.0, res)
+
+
+def _iy_col(lat, res: int):
+    """Grid row of ``lat`` at ``res`` (cells.lonlat_to_ixiy's iy)."""
+    return _grid_index_col(lat, -90.0, 180.0, res)
+
+
 def cell_encode_ixiy_col(ix, iy, res: int):
     """JVM bit-twin of cells.encode_ixiy: Morton-interleave two grid
     indices and tag the resolution (cell = (morton << 5) | res)."""
@@ -318,28 +311,67 @@ def cell_encode_ixiy_col(ix, iy, res: int):
 
 def cell_encode_col(lon, lat, res: int):
     """JVM bit-twin of cells.encode(lon, lat, res) — pure Column
-    arithmetic, whole-stage codegen, no Python worker (contrast
-    encode_cell_udf; asserted equal in tests/test_round5_ops.py)."""
-    return cell_encode_ixiy_col(_grid_index_col(lon, -180.0, 360.0, res),
-                                _grid_index_col(lat, -90.0, 180.0, res),
-                                res)
+    arithmetic, whole-stage codegen, no Python worker (asserted equal
+    in tests/test_round5_ops.py)."""
+    return cell_encode_ixiy_col(_ix_col(lon, res), _iy_col(lat, res), res)
 
 
-def cell_cover_bbox_col(minx, miny, maxx, maxy, res: int):
-    """array<long> of every cell at ``res`` whose grid rectangle
-    intersects the bbox — the JVM twin of a rectangular cells cover:
-    a nested sequence over the ix and iy index ranges, flattened.
-    Builds inside the scan stage (zero Python, zero shuffle); cover
-    size is (ix span)x(iy span) — pick ``res`` so typical geometries
-    span O(1..10) cells, exactly like the UDF covers."""
-    ix0 = _grid_index_col(minx, -180.0, 360.0, res)
-    ix1 = _grid_index_col(maxx, -180.0, 360.0, res)
-    iy0 = _grid_index_col(miny, -90.0, 180.0, res)
-    iy1 = _grid_index_col(maxy, -90.0, 180.0, res)
-    return F.flatten(F.transform(
-        F.sequence(ix0, ix1),
-        lambda ix: F.transform(F.sequence(iy0, iy1),
-                               lambda iy: cell_encode_ixiy_col(ix, iy, res))))
+def _grid_cover(df: DataFrame, box, prefix: str, res: int,
+                scale: float) -> DataFrame:
+    """``df`` plus its bbox ``box`` (minx, miny, maxx, maxy Columns in
+    1/``scale`` degrees) as ``{prefix}minx`` .. ``{prefix}maxy``, one row
+    per (ix, iy) grid cell at ``res`` the bbox touches: two sequence
+    explodes over the clamped index ranges, inside the scan stage (the
+    JVM twin of cells.cover_bbox).  Cover size is (ix span) x (iy span):
+    pick ``res`` so typical geometries span O(1..10) cells."""
+    names = [prefix + c for c in ("minx", "miny", "maxx", "maxy")]
+    minx, miny, maxx, maxy = (F.col(c) / scale for c in names)
+    return (df.select("*", *[c.alias(a) for c, a in zip(box, names)])
+            .withColumn("ix", F.explode(F.sequence(_ix_col(minx, res),
+                                                   _ix_col(maxx, res))))
+            .withColumn("iy", F.explode(F.sequence(_iy_col(miny, res),
+                                                   _iy_col(maxy, res)))))
+
+
+def _grid_join(left, right, res: int, cols: list, refine=None,
+               scale: float = 1.0) -> DataFrame:
+    """The grid-partitioned filter-refine join of two sets of extended
+    geometries, with no Python at any stage.  ``left``/``right`` are
+    (DataFrame, bbox) pairs, the bbox four Columns over that frame in
+    1/``scale`` degrees.
+
+      - each side explodes into the (ix, iy) cells its bbox touches
+        (_grid_cover);
+      - candidates come from the equi-join ON (ix, iy) ONLY, never a
+        cross join;
+      - the bbox-overlap prefilter (closed intervals, in the inputs'
+        own units — exact for integer coordinates) drops far pairs;
+      - the REFERENCE-POINT rule reports a pair only in the cell of its
+        bbox overlap's min corner, floored with the cover's own
+        expression — dedup by construction, no distinct shuffle;
+      - ``refine`` (a boolean Column over both sides' columns, or None
+        when bbox overlap is the whole test) decides the rest.
+
+    The key is the raw index pair, not the Morton cell: (ix, iy) <->
+    cell is a bijection at fixed res, so candidates and output are the
+    same, while a Morton key inlines the 5-stage bit spread into every
+    cover row and dedup check (a generated method large enough to
+    degrade per-candidate cost ~10x at sf1.0 volumes).  Returns
+    ``cols`` of the surviving pairs."""
+    la = _grid_cover(*left, "_l_", res, scale)
+    rb = _grid_cover(*right, "_r_", res, scale)
+    out = (la.join(rb, ["ix", "iy"])
+           .where((F.col("_l_minx") <= F.col("_r_maxx"))
+                  & (F.col("_l_maxx") >= F.col("_r_minx"))
+                  & (F.col("_l_miny") <= F.col("_r_maxy"))
+                  & (F.col("_l_maxy") >= F.col("_r_miny")))
+           .where((_ix_col(F.greatest("_l_minx", "_r_minx") / scale, res)
+                   == F.col("ix"))
+                  & (_iy_col(F.greatest("_l_miny", "_r_miny") / scale, res)
+                     == F.col("iy"))))
+    if refine is not None:
+        out = out.where(refine)
+    return out.select(*cols)
 
 
 def pick_res_for_spans(minx: float, miny: float, maxx: float, maxy: float,
@@ -435,22 +467,12 @@ def diamond_join(left: DataFrame, right: DataFrame, res: int = 6,
     coordinates integers in 1/``scale`` degrees.  Returns (a_id, b_id)
     pairs whose closed diamonds intersect (touching counts).
 
-    Scale shape — the grid-partitioned filter-refine join with ZERO
-    Python at any stage:
-      - both sides explode into their bbox's cell cover INSIDE the
-        scan stage (cell_cover_bbox_col — arrays built by codegen);
-      - candidates come from the equi-join ON CELL ONLY, never a
-        cross join (small side broadcasts when Catalyst sees fit);
-      - an integer bbox-overlap prefilter drops far pairs;
-      - the REFERENCE-POINT rule (pair reported only in the cell of
-        the bbox-overlap's min corner, re-encoded with the same JVM
-        Morton path the cover used, so the floor arithmetic is
-        bit-identical) dedups by construction — no distinct shuffle;
-      - the exact refine is diamond_sat_intersects: four integer
-        separating-axis inequalities, whole-stage codegen.
+    Scale shape: _grid_join over each diamond's integer bbox (cover,
+    equi-join on (ix, iy), integer bbox prefilter, reference-point
+    dedup) with diamond_sat_intersects as the refine — four integer
+    separating-axis inequalities, whole-stage codegen, zero Python.
     """
     from .dedup import _ensure_parallelism
-    sc = float(scale)
     _require_integral(left, ["acx", "acy", "aw", "ah"], "diamond_join")
     _require_integral(right, ["bcx", "bcy", "bw", "bh"], "diamond_join")
     # small scans arrive as ONE split; the refine predicate then runs
@@ -459,32 +481,17 @@ def diamond_join(left: DataFrame, right: DataFrame, res: int = 6,
     # inputs carry more splits than cores.
     left = _ensure_parallelism(left)
     right = _ensure_parallelism(right)
-    la = left.select(
-        "a_id", "acx", "acy", "aw", "ah",
-        F.explode(cell_cover_bbox_col(
-            (F.col("acx") - F.col("aw")) / sc,
-            (F.col("acy") - F.col("ah")) / sc,
-            (F.col("acx") + F.col("aw")) / sc,
-            (F.col("acy") + F.col("ah")) / sc, res)).alias("cell"))
-    rb = right.select(
-        "b_id", "bcx", "bcy", "bw", "bh",
-        F.explode(cell_cover_bbox_col(
-            (F.col("bcx") - F.col("bw")) / sc,
-            (F.col("bcy") - F.col("bh")) / sc,
-            (F.col("bcx") + F.col("bw")) / sc,
-            (F.col("bcy") + F.col("bh")) / sc, res)).alias("cell"))
-    rx = F.greatest(F.col("acx") - F.col("aw"), F.col("bcx") - F.col("bw"))
-    ry = F.greatest(F.col("acy") - F.col("ah"), F.col("bcy") - F.col("bh"))
-    return (la.join(rb, "cell")
-            .where((F.col("acx") - F.col("aw") <= F.col("bcx") + F.col("bw"))
-                   & (F.col("acx") + F.col("aw") >= F.col("bcx") - F.col("bw"))
-                   & (F.col("acy") - F.col("ah") <= F.col("bcy") + F.col("bh"))
-                   & (F.col("acy") + F.col("ah") >= F.col("bcy") - F.col("bh")))
-            .where(cell_encode_col(rx / sc, ry / sc, res) == F.col("cell"))
-            .where(diamond_sat_intersects(
-                F.col("acx"), F.col("acy"), F.col("aw"), F.col("ah"),
-                F.col("bcx"), F.col("bcy"), F.col("bw"), F.col("bh")))
-            .select("a_id", "b_id"))
+
+    def bbox(p):
+        cx, cy, w, h = (F.col(p + c) for c in ("cx", "cy", "w", "h"))
+        return (cx - w, cy - h, cx + w, cy + h)
+
+    return _grid_join(
+        (left, bbox("a")), (right, bbox("b")), res, ["a_id", "b_id"],
+        refine=diamond_sat_intersects(
+            F.col("acx"), F.col("acy"), F.col("aw"), F.col("ah"),
+            F.col("bcx"), F.col("bcy"), F.col("bw"), F.col("bh")),
+        scale=float(scale))
 
 
 def _cross3(ox, oy, ax, ay, bx, by):
@@ -526,58 +533,27 @@ def segment_join(left: DataFrame, right: DataFrame, res: int = 6,
     1/``scale`` degrees.  Returns (a_id, b_id) for every pair of
     closed segments that cross or touch.
 
-    Same zero-Python grid shape as diamond_join: codegen bbox cell
-    cover of each segment -> equi-join on cell -> integer bbox
-    prefilter -> reference-point dedup -> exact integer CCW refine
-    (segments_intersect_cols)."""
+    Same zero-Python shape as diamond_join: _grid_join over each
+    segment's integer bbox, with the exact integer CCW test
+    (segments_intersect_cols) as the refine."""
     from .dedup import _ensure_parallelism
-    sc = float(scale)
     _require_integral(left, ["ax1", "ay1", "ax2", "ay2"], "segment_join")
     _require_integral(right, ["bx1", "by1", "bx2", "by2"], "segment_join")
     # see diamond_join: probe-side parallelism floor for small scans
     left = _ensure_parallelism(left)
     right = _ensure_parallelism(right)
 
-    # Join key = the RAW GRID INDEX PAIR (ix, iy), not the Morton cell:
-    # the cover is two plain sequence-explodes and the reference-point
-    # check two clamped floors.  The earlier Morton form inlined the
-    # 5-stage bit spread several times per candidate row — a generated
-    # method so large it degraded per-candidate cost ~10x at sf1.0
-    # volumes.  (ix, iy) <-> cell is a bijection at fixed res, so the
-    # candidate set, the dedup rule and the output are IDENTICAL.
-    def covered(df, pfx, id_col):
-        minx = F.least(F.col(f"{pfx}x1"), F.col(f"{pfx}x2"))
-        maxx = F.greatest(F.col(f"{pfx}x1"), F.col(f"{pfx}x2"))
-        miny = F.least(F.col(f"{pfx}y1"), F.col(f"{pfx}y2"))
-        maxy = F.greatest(F.col(f"{pfx}y1"), F.col(f"{pfx}y2"))
-        return (df.select(
-            id_col, f"{pfx}x1", f"{pfx}y1", f"{pfx}x2", f"{pfx}y2",
-            minx.alias(f"{pfx}_minx"), maxx.alias(f"{pfx}_maxx"),
-            miny.alias(f"{pfx}_miny"), maxy.alias(f"{pfx}_maxy"))
-            .withColumn("ix", F.explode(F.sequence(
-                _grid_index_col(minx / sc, -180.0, 360.0, res),
-                _grid_index_col(maxx / sc, -180.0, 360.0, res))))
-            .withColumn("iy", F.explode(F.sequence(
-                _grid_index_col(miny / sc, -90.0, 180.0, res),
-                _grid_index_col(maxy / sc, -90.0, 180.0, res)))))
+    def bbox(p):
+        x1, y1, x2, y2 = (F.col(p + c) for c in ("x1", "y1", "x2", "y2"))
+        return (F.least(x1, x2), F.least(y1, y2),
+                F.greatest(x1, x2), F.greatest(y1, y2))
 
-    la = covered(left, "a", "a_id")
-    rb = covered(right, "b", "b_id")
-    rx = F.greatest("a_minx", "b_minx")
-    ry = F.greatest("a_miny", "b_miny")
-    return (la.join(rb, ["ix", "iy"])
-            .where((F.col("a_minx") <= F.col("b_maxx"))
-                   & (F.col("a_maxx") >= F.col("b_minx"))
-                   & (F.col("a_miny") <= F.col("b_maxy"))
-                   & (F.col("a_maxy") >= F.col("b_miny")))
-            .where((_grid_index_col(rx / sc, -180.0, 360.0, res)
-                    == F.col("ix"))
-                   & (_grid_index_col(ry / sc, -90.0, 180.0, res)
-                      == F.col("iy")))
-            .where(segments_intersect_cols(
-                F.col("ax1"), F.col("ay1"), F.col("ax2"), F.col("ay2"),
-                F.col("bx1"), F.col("by1"), F.col("bx2"), F.col("by2")))
-            .select("a_id", "b_id"))
+    return _grid_join(
+        (left, bbox("a")), (right, bbox("b")), res, ["a_id", "b_id"],
+        refine=segments_intersect_cols(
+            F.col("ax1"), F.col("ay1"), F.col("ax2"), F.col("ay2"),
+            F.col("bx1"), F.col("by1"), F.col("bx2"), F.col("by2")),
+        scale=float(scale))
 
 
 def _hull_extreme_points(px, py):

@@ -950,10 +950,11 @@ def q_winnow_near_dup(spark, sf_dir):
 
 
 def q_cell_encode(spark, sf_dir):
-    from ..operators.spark_joins import encode_cell_udf
+    from ..operators.spark_joins import cell_encode_col
     pts = _points_from_customer(spark, sf_dir)
-    enc = encode_cell_udf(CELL_RES)
-    return pts.select("pid", enc("lon", "lat").alias("cell")).orderBy("pid")
+    return (pts.select("pid", cell_encode_col(F.col("lon"), F.col("lat"),
+                                              CELL_RES).alias("cell"))
+            .orderBy("pid"))
 
 
 def _sql_morton_cell(res: int) -> str:

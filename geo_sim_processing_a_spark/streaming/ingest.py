@@ -75,26 +75,26 @@ def stateful_cell_counts(pages_stream: DataFrame, res: int = 6) -> DataFrame:
     per-cell running page totals that survive across micro-batches AND
     across restarts (the state store is part of the stream checkpoint).
 
-    Geocoding runs JVM-side (the pmod geocode formula is plain SQL);
-    the cell encode is the same Arrow kernel as the batch path; the
-    state update is one pandas group per cell holding
-    (running total, batches seen).  This is the streaming twin of the
-    per-tile counter manifest in the batch pipeline (S7/R2)."""
+    Geocoding and the cell encode run JVM-side (the pmod geocode
+    formula is plain SQL; cell_encode_col is the bit-for-bit Column
+    twin of cells.encode); the state update is one pandas group per
+    cell holding (running total, batches seen).  This is the streaming
+    twin of the per-tile counter manifest in the batch pipeline
+    (S7/R2)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.spark_joins import encode_cell_udf
-
+    from ..operators.spark_joins import cell_encode_col
     from ..sources.pages import geocode_columns
 
-    enc = encode_cell_udf(res)
     with_h = (pages_stream
               .withColumn("doc_id",
                           F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long"))
               .withColumn("h", F.xxhash64("doc_id")))
     lon, lat = geocode_columns(F.col("h"))
     with_cell = (with_h.withColumn("lon", lon).withColumn("lat", lat)
-                 .withColumn("cell", enc("lon", "lat")))
+                 .withColumn("cell", cell_encode_col(F.col("lon"),
+                                                     F.col("lat"), res)))
 
     def update(key, pdfs, state: GroupState):
         n = 0

@@ -50,26 +50,6 @@ def test_parent_child_prefix():
     assert ((kids == c11[:, None]).any(axis=1)).all()
 
 
-def test_neighbor_symmetry():
-    rng = np.random.RandomState(3)
-    lon = rng.uniform(-170, 170, 300)
-    lat = rng.uniform(-80, 80, 300)
-    c = cells.encode(lon, lat, 8)
-    nb = cells.neighbors(c)
-    assert nb.shape == (300, 8)
-    # symmetry: c is a neighbor of each of its neighbors
-    for k in range(8):
-        back = cells.neighbors(nb[:, k])
-        assert ((back == c[:, None]).any(axis=1)).all()
-
-
-def test_neighbor_lon_wrap():
-    c = cells.encode(np.array([-179.99]), np.array([0.0]), 6)
-    nb = cells.neighbors(c)
-    ix, iy, r = cells.decode(nb.ravel())
-    assert (ix == (1 << 6) - 1).sum() == 3  # wraps to the far column
-
-
 def test_cover_bbox():
     got = cells.cover_bbox(-1.0, -1.0, 1.0, 1.0, 8)
     x0, y0, x1, y1 = cells.cell_bounds(got)

@@ -217,6 +217,21 @@ def test_curation_udf_free_mapside_dedup(spark):
     assert "Window" not in plan
 
 
+def test_curation_exact_path_reuses_dedup_exchange(spark):
+    """curate_corpus passes materialize=False on the exact path because
+    the dedup's Exchange-topped frame feeds both consumers of
+    _quality_and_split and AQE shares it: the executed (isFinalPlan)
+    plan must show the second consumer as a ReusedExchange.  If exchange
+    reuse stops firing, the corpus-wide dedup shuffle runs twice and
+    this fails."""
+    from geo_sim_processing_a_spark.plans.driver_queries import q_curation
+    df = q_curation(spark, SF_DIR)
+    df.collect()
+    plan = plan_of(df)
+    assert "isFinalPlan=true" in plan, plan
+    assert "ReusedExchange" in plan, plan
+
+
 # ---------------------------------------------------------------------------
 # round-5 plan-lint sweep: EVERY driver query, automatically
 # ---------------------------------------------------------------------------
@@ -269,3 +284,30 @@ def test_plan_lint_sweep(spark, name):
             if d2 == d + 1:
                 assert not t2.startswith("Exchange"), \
                     f"Exchange directly feeding Exchange in {name}:\n{plan}"
+
+
+def _python_nodes(plan: str) -> list:
+    """Names of the plan's Python-evaluating nodes (ArrowEvalPython,
+    MapInPandas, FlatMapCoGroupsInPandas, ...), one per tree node."""
+    names = [text.split(" ")[0] for _, text in _tree_nodes(plan)]
+    return [n for n in names if _re.search(r"Python|InPandas|InArrow", n)]
+
+
+def test_knn_plan_python_only_in_refine(spark):
+    """kNN keys its cells JVM-side: the cogrouped NumPy refine is the
+    plan's only Python node (no cell-encode or ring-1 UDF)."""
+    from geo_sim_processing_a_spark.plans.driver_queries import q_knn
+    plan = plan_of(q_knn(spark, SF_DIR))
+    assert _python_nodes(plan) == ["FlatMapCoGroupsInPandas"], plan
+
+
+def test_pip_join_plan_python_only_cover_and_refine(spark):
+    """pip encodes its points JVM-side: the one ArrowEvalPython left is
+    the exact polygon cover on the broadcast side, plus the NumPy
+    refine."""
+    from geo_sim_processing_a_spark.plans.driver_queries import q_pip_join
+    plan = plan_of(q_pip_join(spark, SF_DIR))
+    assert sorted(_python_nodes(plan)) == [
+        "ArrowEvalPython", "FlatMapGroupsInPandas"], plan
+    assert "cover_udf" in next(t for _, t in _tree_nodes(plan)
+                               if t.startswith("ArrowEvalPython")), plan

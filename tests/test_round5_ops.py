@@ -1644,17 +1644,17 @@ def test_cell_encode_col_bit_twin(spark):
         assert got == want, res
 
 
-def test_cell_cover_bbox_col_matches_python(spark):
-    """The flattened nested-sequence cover equals the
-    clamped-index-rectangle cover computed in Python."""
+def test_grid_join_cover_matches_python(spark):
+    """_grid_join's cover (_grid_cover: two sequence explodes into raw
+    (ix, iy) cells) is exactly cells.cover_bbox, the Python reference,
+    including the clamp at the world bounds."""
     import numpy as _np
     import pandas as _pd
     from pyspark.sql import functions as F
 
     from geo_sim_processing_a_spark.operators import cells as C
-    from geo_sim_processing_a_spark.operators.spark_joins import (
-        cell_cover_bbox_col)
-    res, n = 6, 1 << 6
+    from geo_sim_processing_a_spark.operators.spark_joins import _grid_cover
+    res = 6
     rng = _np.random.default_rng(11)
     boxes = []
     for _ in range(50):
@@ -1663,21 +1663,16 @@ def test_cell_cover_bbox_col_matches_python(spark):
     boxes.append((-180.0, -90.0, -179.9, -89.9))   # clamp corner
     boxes.append((179.0, 89.0, 185.0, 95.0))       # clamp overflow
     df = spark.createDataFrame(_pd.DataFrame(
-        boxes, columns=["minx", "miny", "maxx", "maxy"]))
-    got = [sorted(r["cov"]) for r in df.select(
-        cell_cover_bbox_col(F.col("minx"), F.col("miny"),
-                            F.col("maxx"), F.col("maxy"), res)
-        .alias("cov")).collect()]
-
-    def idx(v, lo, extent):
-        return min(max(int(_np.floor((v - lo) / extent * n)), 0), n - 1)
-
-    for (x0, y0, x1, y1), g in zip(boxes, got):
-        want = sorted(
-            int(C.encode_ixiy(_np.array([ix]), _np.array([iy]), res)[0])
-            for ix in range(idx(x0, -180, 360), idx(x1, -180, 360) + 1)
-            for iy in range(idx(y0, -90, 180), idx(y1, -90, 180) + 1))
-        assert g == want
+        [(i, *b) for i, b in enumerate(boxes)],
+        columns=["id", "minx", "miny", "maxx", "maxy"]))
+    box = [F.col(c) for c in ("minx", "miny", "maxx", "maxy")]
+    got = {}
+    for r in _grid_cover(df, box, "_g_", res, 1.0).collect():
+        got.setdefault(r["id"], []).append(
+            int(C.encode_ixiy(_np.array([r["ix"]]), _np.array([r["iy"]]),
+                              res)[0]))
+    for i, b in enumerate(boxes):
+        assert sorted(got[i]) == sorted(C.cover_bbox(*b, res).tolist()), b
 
 
 def _py_diamond_hit(a, b):
@@ -1731,15 +1726,17 @@ def _bbox_overlap(a, b):
             and a[1] - a[3] <= b[1] + b[3] and a[1] + a[3] >= b[1] - b[3])
 
 
-def test_poly_join_plan_fully_jvm(spark):
-    """The whole join plan contains NO Python stage (no
-    BatchEvalPython / ArrowEvalPython / mapInPandas) — cover, dedup,
-    and SAT refine are all codegen Column arithmetic."""
+@pytest.mark.parametrize("name", ["q_poly_join", "q_segment_join",
+                                   "q_range_join", "q_cell_encode"])
+def test_join_plan_fully_jvm(spark, name):
+    """The whole plan contains NO Python stage (no BatchEvalPython /
+    ArrowEvalPython / mapInPandas / pandas group kernels) — cell keys,
+    cover, dedup and refine are all codegen Column arithmetic."""
     from geo_sim_processing_a_spark.plans.driver_queries import all_queries
-    df = all_queries()["q_poly_join"](spark, "/root/testdata/sf0.001")
+    df = all_queries()[name](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                "FlatMapGroupsInPandas"):
+                "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"):
         assert bad not in plan, plan
 
 
@@ -1953,15 +1950,6 @@ def test_segment_join_adaptive_res_output_identical(spark):
     new = sorted(map(tuple, all_queries()["q_segment_join"](spark, sf)
                      .collect()))
     assert new == old and len(new) > 0
-
-
-def test_segment_join_plan_fully_jvm(spark):
-    from geo_sim_processing_a_spark.plans.driver_queries import all_queries
-    df = all_queries()["q_segment_join"](spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                "FlatMapGroupsInPandas"):
-        assert bad not in plan, plan
 
 
 # ---------------------------------------------------------------------------

@@ -48,20 +48,47 @@ def test_pip_join_matches_bruteforce(spark):
     assert len(exp) > 100  # non-trivial fixture
 
 
+def _assert_knn_matches_bruteforce(pts, lon, lat, k, res):
+    got = {}
+    for r in knn_join(pts, k=k, res=res).collect():
+        got.setdefault(r["pid"], []).append((r["rank"], r["neighbor_id"]))
+    d2 = (lon[:, None] - lon[None, :]) ** 2 + (lat[:, None] - lat[None, :]) ** 2
+    np.fill_diagonal(d2, np.inf)
+    ids = np.arange(len(lon))
+    assert len(got) == len(lon)
+    for i in range(len(lon)):
+        order = np.lexsort((ids, d2[i]))[:k]
+        exp = [(r + 1, int(order[r])) for r in range(k)]
+        assert sorted(got[i]) == exp, f"pid {i} k {k}"
+
+
 def test_knn_matches_bruteforce(spark):
     # points confined to one res-4 cell's span so cell+ring1 covers all
     pts, lon, lat = make_points(spark, n=800, lo=0.1, hi=5.0, seed=3)
     for k in (1, 5):
-        got = {}
-        for r in knn_join(pts, k=k, res=4).collect():
-            got.setdefault(r["pid"], []).append((r["rank"], r["neighbor_id"]))
-        d2 = (lon[:, None] - lon[None, :]) ** 2 + (lat[:, None] - lat[None, :]) ** 2
-        np.fill_diagonal(d2, np.inf)
-        ids = np.arange(len(lon))
-        for i in range(len(lon)):
-            order = np.lexsort((ids, d2[i]))[:k]
-            exp = [(r + 1, int(order[r])) for r in range(k)]
-            assert sorted(got[i]) == exp, f"pid {i} k {k}"
+        _assert_knn_matches_bruteforce(pts, lon, lat, k, res=4)
+
+
+@pytest.mark.parametrize("res", [1, 2])
+def test_knn_matches_bruteforce_at_wrap_and_poles(spark, res):
+    """Clusters in the four corners of the lon/lat plane, boundary
+    values included, where ring-1 wraps ix across lon +-180 and stops
+    at the poles; plus one cluster on the prime meridian.  At res 1
+    the wrap sends the -1 and +1 offsets to the same cell, so the
+    meridian cluster's points arrive twice as candidates across lon 0
+    and only the refine's dedup keeps the ranks exact."""
+    rng = np.random.RandomState(5 + res)
+    lon, lat = [rng.uniform(-1.5, 1.5, 25)], [rng.uniform(-1.5, 1.5, 25)]
+    for sx in (-1, 1):
+        for sy in (-1, 1):
+            lon.append(sx * rng.uniform(177.0, 180.0, 25))
+            lat.append(sy * rng.uniform(87.0, 90.0, 25))
+    lon = np.concatenate(lon + [np.array([-180.0, 180.0, 179.5, -179.5])])
+    lat = np.concatenate(lat + [np.array([-90.0, 90.0, -90.0, 90.0])])
+    pts = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "pid long, lon double, lat double")
+    _assert_knn_matches_bruteforce(pts, lon, lat, k=3, res=res)
 
 
 def test_range_join_edges_and_dedup(spark):

@@ -55,7 +55,8 @@ def main():
          Q.q_raster_tiles(spark, SF_DIR))
     dump("q_chordal_axis (skeleton geometry, one kernel pass)",
          Q.q_chordal_axis(spark, SF_DIR))
-    dump("q_range_join (grid-cover equi-join on cell, no cartesian)",
+    dump("q_range_join (grid join: (ix, iy) cover equi-join, no Python, "
+         "no cartesian)",
          Q.q_range_join(spark, SF_DIR))
     # round-3 shape: kNN cogroups queries/candidates per cell — the
     # plan must show FlatMapCoGroupsInPandas, never a join of the two

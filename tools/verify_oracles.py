@@ -6,8 +6,11 @@ order-insensitive value multiset.  Usage:
 
 from __future__ import annotations
 
+import contextlib
 import os
+import subprocess
 import sys
+import tempfile
 
 import duckdb
 
@@ -15,6 +18,32 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+@contextlib.contextmanager
+def oracle_db(sf_dir):
+    """DuckDB connection with one view per table of ``sf_dir``.  It
+    spills to a private temp directory (DuckDB's default is ``./.tmp``
+    in the working directory, and a brute-force oracle spills tens of
+    GB before ``timeout`` stops it).  A watchdog process in its own session
+    removes the directory once this process closes the pipe to it: on
+    exit from the block, and also when the process is killed.  A signal
+    handler or ``finally`` here cannot do that, because the handler
+    never runs while a long DuckDB call holds the interpreter."""
+    tmp = tempfile.mkdtemp(prefix="oracle_duckdb_")
+    watchdog = subprocess.Popen(
+        [sys.executable, "-c", "import shutil, sys; sys.stdin.read(); "
+         "shutil.rmtree(sys.argv[1], ignore_errors=True)", tmp],
+        stdin=subprocess.PIPE, start_new_session=True)
+    con = duckdb.connect(config={"temp_directory": tmp})
+    try:
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        yield con
+    finally:
+        con.close()
+        watchdog.stdin.close()
+        watchdog.wait()
 
 
 def canon_rows(cols, rows):
@@ -50,10 +79,16 @@ def main():
     from geo_sim_processing_a_spark.plans.session import get_spark
 
     spark = get_spark("verify", cpus=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    with oracle_db(sf_dir) as con:
+        failures = _verify(spark, con, sf_dir, name_filter, entrymod)
+    spark.stop()
+    if failures:
+        print(f"\n{len(failures)} FAILURES")
+        sys.exit(1)
+    print("\nall queries verified")
 
+
+def _verify(spark, con, sf_dir, name_filter, entrymod):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
@@ -93,11 +128,7 @@ def main():
             print(f"FAIL  {name}: values differ, e.g. {diff[:1]}")
         else:
             print(f"OK    {name}: {len(rows)} rows hash-match")
-    spark.stop()
-    if failures:
-        print(f"\n{len(failures)} FAILURES")
-        sys.exit(1)
-    print("\nall queries verified")
+    return failures
 
 
 if __name__ == "__main__":

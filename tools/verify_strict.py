@@ -23,13 +23,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+from tools.verify_oracles import oracle_db  # noqa: E402
 
 
 def compare(sdf, odf):
@@ -90,10 +88,16 @@ def main():
     from geo_sim_processing_a_spark.plans.session import get_spark
 
     spark = get_spark("verify_strict", cpus=16, shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    with oracle_db(sf_dir) as con:
+        failures = _verify(spark, con, sf_dir, name_filter, entrymod)
+    spark.stop()
+    if failures:
+        print(f"\n{len(failures)} STRICT FAILURES: {failures}")
+        sys.exit(1)
+    print("\nall queries bit-exact")
 
+
+def _verify(spark, con, sf_dir, name_filter, entrymod):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
@@ -130,11 +134,7 @@ def main():
         else:
             failures.append(name)
             print(f"FAIL  {name}: {detail}")
-    spark.stop()
-    if failures:
-        print(f"\n{len(failures)} STRICT FAILURES: {failures}")
-        sys.exit(1)
-    print("\nall queries bit-exact")
+    return failures
 
 
 if __name__ == "__main__":
