@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .policy import floor, share
 from .sampling import deterministic_split
 from .text import repetition_stats
 
@@ -39,15 +40,12 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     Returns the surviving rows with ``n_tokens``, ``top_share`` and
     ``split`` columns added."""
     reps = dedup_reps(docs, id_col, text_col)
-    # materialize=False is structural, not size-tuned: dedup_reps is
-    # Exchange-topped, so AQE ReusedExchange already shares the dedup
-    # shuffle between the two consumers in _quality_and_split and a
-    # checkpoint only buys blocked column pruning (A/B at sf0.1 AND a
-    # 10x corpus: no-cut 1.42/3.83 s vs cut 1.59/4.26 s, count sink).
-    # The reuse is plan-gated on the executed plan:
-    # tests/test_plans.py::test_curation_exact_path_reuses_dedup_exchange
+    # no share(), by structure: dedup_reps is Exchange-topped, so AQE's
+    # ReusedExchange already shares it between _quality_and_split's two
+    # consumers and a cut only blocks column pruning (policy A/B); gated
+    # by tests/test_plans.py::test_curation_exact_path_reuses_dedup_exchange
     return _quality_and_split(reps, id_col, text_col, min_tokens,
-                              max_top_share, ngram_n, materialize=False)
+                              max_top_share, ngram_n)
 
 
 def dedup_reps(docs: DataFrame, id_col: str = "doc_id",
@@ -64,44 +62,19 @@ def dedup_reps(docs: DataFrame, id_col: str = "doc_id",
 
 def _quality_and_split(reps: DataFrame, id_col: str, text_col: str,
                        min_tokens: int, max_top_share: float,
-                       ngram_n: int, split_col: str = None,
-                       materialize: bool | None = None) -> DataFrame:
+                       ngram_n: int, split_col: str = None) -> DataFrame:
     """Steps 2-3 of the curation contract (shared by the exact, fuzzy
     and web front ends): token floor + repetition ceiling computed on
     ``text_col``, then the deterministic content-addressed split keyed
     on ``split_col`` (defaults to ``text_col``).
 
-    ``materialize`` (None = auto via ``_is_big``) cuts the plan after
-    the token count.  Without the cut the survivor frame's upstream
-    executes once per consumer, so the two sides of the self-join agree
-    only if that upstream is deterministic (unique ids for min_by,
-    deterministic LSH canonicals): a sampled or otherwise
-    non-deterministic ``reps`` must pass ``materialize=True``."""
-    from .dedup import _is_big
-
-    # materialize ONCE when the frame is worth it: the survivor frame
-    # feeds BOTH the gram stats subtree and the join's probe side; as a
-    # plan tree the whole upstream (dedup agg / LSH clustering /
-    # web-synth chain) would otherwise execute twice (r6 plan audit:
-    # q_curation_web replayed the documents scan 64x through stacked
-    # re-references).  Size-conditional like the lm/search checkpoints:
-    # the checkpoint blocks count-sink column pruning, so for a SMALL
-    # exact-path frame (Exchange-topped dedup agg — ReusedExchange
-    # already shares the shuffle) it costs more than the replay it
-    # saves (r6 interleaved A/B, count sink, min of 3: exact 1.42 s
-    # no-ckpt vs 1.59 ckpt; fuzzy 1.19 ckpt vs 1.49 no-ckpt — the
-    # fuzzy/web inputs sit behind joins whose stats estimates are big,
-    # so they keep the cut).  ``materialize``: None = auto via _is_big;
-    # callers whose input is Exchange-topped (exact path) pass False —
-    # there ReusedExchange already shares the expensive subtree and the
-    # cut is structurally never worth it (A/B at two sizes in
-    # curate_corpus)
+    ``reps`` feeds two consumers (gram stats and the join's probe
+    side): callers cut it with policy.share when it sits behind joins,
+    or its upstream runs once per consumer (r6: q_curation_web replayed
+    the documents scan 64x).  Uncut, the two sides agree only if that
+    upstream is deterministic — a sampled ``reps`` must be cut."""
     reps = reps.withColumn(
         "n_tokens", F.size(F.split(F.col(text_col), " ")).cast("long"))
-    if materialize is None:
-        materialize = _is_big(reps)
-    if materialize:
-        reps = reps.localCheckpoint(eager=False)
     rep = repetition_stats(reps, n=ngram_n, id_col=id_col,
                            text_col=text_col).select("doc_id", "top_share")
     out = (reps.join(rep, reps[id_col] == rep["doc_id"])
@@ -140,13 +113,12 @@ def curate_web_pages(pages: DataFrame, id_col: str = "doc_id",
     from .pii import redact_pii
     from .urls import domain_cap, normalize_urls
 
-    # materialize the raw pages ONCE: four plan branches reference them
-    # (url normalize, boilerplate frequency, line strip keyed + base) —
-    # as a tree each branch would re-run the whole upstream synth/scan.
-    # No repartition HERE: a floor after the synth chain would compute
-    # the synth serially and then pay a fat shuffle — callers floor the
-    # RAW input instead (curate_web_corpus does).
-    pages = pages.localCheckpoint(eager=False)
+    # cut the raw pages ONCE: four plan branches (url normalize,
+    # boilerplate frequency, line strip keyed + base) would each re-run
+    # the upstream synth/scan.  No floor HERE: after the synth chain it
+    # would run the synth serially, then shuffle — callers floor the
+    # RAW input (curate_web_corpus does).
+    pages = share(pages)
     u = (normalize_urls(pages.select(id_col, url_col), url_col=url_col)
          .select(id_col, "domain"))                                # 1
     if boiler_keys is None:
@@ -168,7 +140,7 @@ def curate_web_pages(pages: DataFrame, id_col: str = "doc_id",
     stats = reps.withColumn(                                       # 5+7
         "stats_text", F.replace(F.col("text_redacted"),
                                 F.lit("\n"), F.lit(" ")))
-    q = _quality_and_split(stats, id_col, "stats_text", min_tokens,
+    q = _quality_and_split(share(stats), id_col, "stats_text", min_tokens,
                            max_top_share, ngram_n,
                            split_col="text_redacted")
     capped = domain_cap(q, cap=cap_per_domain, id_col=id_col,      # 6
@@ -189,16 +161,12 @@ def curate_web_corpus(docs: DataFrame, id_col: str = "doc_id",
     so the ENTIRE composition is hash-verified end-to-end
     (q_curation_web at sf0.001/0.01/0.1)."""
     from .boilerplate import synth_pages_with_boilerplate
-    from .dedup import _ensure_parallelism_if_big
     from .pii import synth_pii_text
     from .urls import synth_messy_urls
 
-    # size-conditional floor on the RAW scan: for big inputs the
-    # regex-heavy synth chain must parallelize before the pages
-    # checkpoint pins the partitioning; for small inputs the floor's
-    # task fan-out costs more than the serial synth (A/B in
-    # _ensure_parallelism_if_big's docstring)
-    d = _ensure_parallelism_if_big(docs.select(id_col, text_col, source_col))
+    # floor the RAW scan: for big inputs the regex-heavy synth chain
+    # must parallelize before the pages cut pins the partitioning
+    d = floor(docs.select(id_col, text_col, source_col), if_big=True)
     raw = synth_pages_with_boilerplate(
         synth_pii_text(synth_messy_urls(d, id_col=id_col,
                                         source_col=source_col),
@@ -235,6 +203,6 @@ def curate_corpus_fuzzy(docs: DataFrame, id_col: str = "doc_id",
                                  threshold=threshold, **near_dup_kwargs)
     keep = (clusters.where(F.col("is_canonical"))
             .select(F.col(id_col)))
-    reps = docs.join(keep, id_col)
+    reps = share(docs.join(keep, id_col))
     return _quality_and_split(reps, id_col, text_col, min_tokens,
                               max_top_share, ngram_n)

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .policy import floor, share
+
 MERSENNE = (1 << 61) - 1
 
 
@@ -46,55 +48,14 @@ def _shingle_hashes(text: str, n: int) -> np.ndarray:
     # (~45-token docs: per-doc ops stay in cache, the flat
     # (260k, n_hashes) uint64 matrix is memory-bound — 0.13s -> 0.76s
     # for the permutation step at sf0.1) and reverted; the actual
-    # q_minhash cost is Spark-side parallelism, fixed in
-    # _ensure_parallelism below.
+    # q_minhash cost is Spark-side parallelism, fixed by the
+    # policy.floor before each signature stage.
     toks = text.lower().split()
     if len(toks) < n:
         toks = toks + [""] * (n - len(toks))
     return np.array(sorted({zlib.crc32(" ".join(toks[i:i + n]).encode("utf-8"))
                             for i in range(max(1, len(toks) - n + 1))}),
                     dtype=np.uint64)
-
-
-def _ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Python-kernel stages (signature UDFs) want at least one task per
-    core: a small parquet input arrives as ONE split and would run the
-    whole Arrow kernel single-threaded.  Repartition only when the scan
-    is narrower than ``target`` (default parallelism) — a no-op at
-    scale, where inputs carry orders of magnitude more splits than
-    cores.  Shared by dedup/text/skeleton/driver-query kernels."""
-    if target is None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def _is_big(df: DataFrame, min_bytes: int = 2 << 20) -> bool:
-    """Free size arbiter for the conditional tuning helpers below: the
-    optimizer's sizeInBytes estimate (no job).  Unknown size counts as
-    big — at scale the floors/checkpoints are the safe default."""
-    try:
-        size = int(str(df._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes()))
-    except Exception:  # noqa: BLE001 - stats are best-effort
-        size = 1 << 60
-    return size >= min_bytes
-
-
-def _ensure_parallelism_if_big(df: DataFrame, min_bytes: int = 2 << 20,
-                               target: int | None = None) -> DataFrame:
-    """Conditional parallelism floor for JVM-scalar chains: for SMALL
-    inputs the task fan-out a repartition multiplies across every
-    downstream stage costs more than the serial scan work it saves
-    (r6 A/B on curate_web_corpus: floor 3.9 s vs no-floor 2.7 s at
-    sf0.1, but no-floor 10 s vs floor 6-7 s at sf1.0).  The
-    optimizer's sizeInBytes estimate (free) arbitrates; Python-kernel
-    stages should keep the unconditional _ensure_parallelism — their
-    per-row cost dwarfs task overhead at any size."""
-    if not _is_big(df, min_bytes):
-        return df
-    return _ensure_parallelism(df, target)
 
 
 def _perm_params(n_hashes: int):
@@ -183,13 +144,10 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     ALL its band buckets and would lose its own pairs) —
     :func:`near_dup_clusters` does that ordering for you and caps by
     default.
-    Signatures are local-checkpointed (computed once, reused by
-    banding + both verify sides; blocks are reference-tracked and
-    freed with the result — unlike persist(), nothing pins the cache
-    manager.  Trade-off, documented: localCheckpoint truncates
-    lineage, so on a multi-executor cluster a lost executor fails the
-    job instead of recomputing; callers needing fault recovery over
-    long jobs should persist+unpersist around the call instead)."""
+    Signatures are cut with policy.share (computed once, reused by
+    banding + both verify sides; the lineage trade-off is in the policy
+    module — callers needing fault recovery over long jobs should
+    persist+unpersist around the call instead)."""
     from .skew import frequency_cap
 
     if bands < 1 or n_hashes % bands != 0:
@@ -201,11 +159,8 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
             f"minhash_lsh_pairs: bands={bands} must divide "
             f"n_hashes={n_hashes} with rows_per_band >= 1")
     rows_per_band = n_hashes // bands
-    sigs = (minhash_signatures(_ensure_parallelism(docs), id_col, text_col,
-                               n_hashes, shingle, keep_shingles=True)
-            .localCheckpoint(eager=False))  # materialized by the first
-    # consumer (the guard stats agg, or the final action when cap=None)
-    # and cached from then on — eager=True would spend a whole extra job
+    sigs = share(minhash_signatures(floor(docs), id_col, text_col,
+                                    n_hashes, shingle, keep_shingles=True))
 
     buckets = _band_buckets(sigs, rows_per_band, bands)
     if hot_key_cap is not None:
@@ -335,9 +290,8 @@ def _simhash_buckets(docs: DataFrame, id_col: str, text_col: str,
     """(doc_id, simhash, *shard_cols, band, bh): one row per doc per
     band — the exploded LSH bucket assignment both the pair join and
     the analytic volume estimator consume."""
-    sigs = (simhash_signatures(_ensure_parallelism(docs), id_col, text_col,
-                               keep_cols=tuple(shard_cols))
-            .localCheckpoint(eager=False))
+    sigs = share(simhash_signatures(floor(docs), id_col, text_col,
+                                    keep_cols=tuple(shard_cols)))
     mask = (1 << band_bits) - 1
     band_cols = [F.struct(F.lit(b).alias("band"),
                           F.shiftright("simhash", band_bits * b)
@@ -475,12 +429,10 @@ def minhash_lsh_join(left: DataFrame, right: DataFrame,
             f"minhash_lsh_join: bands={bands} must divide "
             f"n_hashes={n_hashes} with rows_per_band >= 1")
     rows_per_band = n_hashes // bands
-    ls = (minhash_signatures(_ensure_parallelism(left), id_col, text_col,
-                             n_hashes, shingle, keep_shingles=True)
-          .localCheckpoint(eager=False))
-    rs = (minhash_signatures(_ensure_parallelism(right), id_col, text_col,
-                             n_hashes, shingle, keep_shingles=True)
-          .localCheckpoint(eager=False))
+    ls = share(minhash_signatures(floor(left), id_col, text_col,
+                                  n_hashes, shingle, keep_shingles=True))
+    rs = share(minhash_signatures(floor(right), id_col, text_col,
+                                  n_hashes, shingle, keep_shingles=True))
     lb = _band_buckets(ls, rows_per_band, bands)
     rb = _band_buckets(rs, rows_per_band, bands)
     if hot_key_cap is not None:

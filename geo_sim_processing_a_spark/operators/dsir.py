@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .policy import floor
 from .sampling import md5_bucket
 from .text import WS_CLASS
 
@@ -47,14 +48,11 @@ def hashed_token_buckets(docs: DataFrame, id_col: str = "doc_id",
     md5-prefix hash to ``n_buckets`` feature buckets (portable across
     engines).  ``nibbles`` hex chars give 16^nibbles raw buckets before
     the modulo — keep 16^nibbles >= n_buckets."""
-    from .dedup import _ensure_parallelism_if_big
     if 16 ** nibbles < n_buckets:
         raise ValueError(f"16^{nibbles} < {n_buckets}: raise nibbles")
-    # size-conditional parallelism floor: per-token md5 bucketing of a
-    # big corpus on a single-split scan would run serially (this frame
-    # feeds two plan branches); a small corpus pays more for the
-    # fan-out than the serial pass costs (lm.py A/B pattern)
-    docs = _ensure_parallelism_if_big(docs)
+    # per-token md5 bucketing of a big corpus on a single-split scan
+    # would run serially (this frame feeds two plan branches)
+    docs = floor(docs, if_big=True)
     toks = docs.select(
         F.col(id_col), *[F.col(c) for c in keep_cols],
         F.explode(F.split(F.trim(F.col(text_col)), WS_CLASS + "+"))

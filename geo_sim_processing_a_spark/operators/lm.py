@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .policy import floor, share
 from .text import WS_CLASS
 
 UNK = "<unk>"
@@ -70,22 +71,11 @@ def bigram_lm_score(docs: DataFrame, id_col: str = "doc_id",
     Returns (doc_id, n_bigrams, ce) — lower ce = more fluent under the
     corpus model (CCNet "head").
     """
-    from .dedup import _ensure_parallelism, _is_big
-
-    # size-conditional tuning (the curate_web A/B pattern): for a BIG
-    # corpus, floor the scan parallelism (single-split scans would
-    # tokenize on one task) and materialize the token stream ONCE —
-    # three plan branches consume it (vocab count, vocab table, bigram
-    # lag) and as a plan tree each would re-run the tokenize/explode.
-    # For a SMALL corpus both hurt: the floor shuffles the raw text a
-    # count-pruned plan barely touches, and the checkpoint blocks
-    # column pruning (A/B at sf0.1: 2.7 s with both vs 1.0 s without;
-    # the 10x corpus flips the sign).
-    big = _is_big(docs)
-    toks = _tokens_with_pos(
-        _ensure_parallelism(docs) if big else docs, id_col, text_col)
-    if big:
-        toks = toks.localCheckpoint(eager=False)
+    # a big corpus: floor (a single split would tokenize on one task)
+    # and cut the token stream, which three plan branches consume
+    # (vocab count, vocab table, bigram lag)
+    toks = share(_tokens_with_pos(floor(docs, if_big=True), id_col,
+                                  text_col), if_big=True)
     vocab = (toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
              .where(F.col("c") >= min_count)
              .select("term", F.lit(1).alias("_in")))

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .policy import floor, share
 from .text import WS_CLASS
 
 
@@ -44,26 +45,18 @@ def bm25_search(docs: DataFrame, query_terms: list[str], k: int = 20,
     score7 = the integer-quantized score in 1e-7 units (divide by 1e7
     for the conventional float score).  Duplicate query terms are
     collapsed; documents matching no term are absent."""
-    from .dedup import _ensure_parallelism, _is_big
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     terms = sorted(set(query_terms))
-    # size-conditional floor + checkpoint (the lm.py A/B: both hurt a
-    # small corpus — the floor shuffles raw text, the checkpoint blocks
-    # column pruning — and both win once the corpus outgrows task
-    # overhead)
-    big = _is_big(docs)
-    toks = ((_ensure_parallelism(docs) if big else docs).select(
+    toks = (floor(docs, if_big=True).select(
         F.col(id_col).alias("_id"),
         F.explode(F.split(F.trim(F.col(text_col)), WS_CLASS + "+"))
         .alias("term"))
         .where(F.col("term") != ""))
-    # document length over the full stream; one hash-agg on _id —
-    # materialized once (the corpus-scalar collect and the scoring
-    # join both read it; one row per doc, tiny)
-    dl = toks.groupBy("_id").agg(F.count(F.lit(1)).alias("dl"))
-    if big:
-        dl = dl.localCheckpoint(eager=False)
+    # document length: one hash-agg on _id, read by the corpus-scalar
+    # collect and the scoring join
+    dl = share(toks.groupBy("_id").agg(F.count(F.lit(1)).alias("dl")),
+               if_big=True)
     # bounded 1-row collect for the two corpus scalars (tfidf-N idiom)
     n_docs, total_tokens = dl.agg(
         F.count(F.lit(1)), F.sum("dl")).first()
@@ -123,10 +116,7 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id",
         raise ValueError(f"min_df must be >= 1, got {min_df}")
     if max_df is not None and max_df < min_df:
         raise ValueError(f"max_df {max_df} < min_df {min_df}")
-    from .dedup import _ensure_parallelism_if_big
-    # size-conditional floor (see bm25_search): a small corpus pays
-    # more for the fan-out shuffle than the serial posexplode costs
-    toks = (_ensure_parallelism_if_big(docs).select(
+    toks = (floor(docs, if_big=True).select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.split(F.trim(F.col(text_col)), WS_CLASS + "+"))
         .alias("pos", "term"))
@@ -178,19 +168,16 @@ def phrase_search(docs: DataFrame, phrase: list[str],
     table you would persist once (build_postings keeps the same
     positions); here it runs straight off the corpus so the oracle
     can rebuild it."""
-    from .dedup import _ensure_parallelism
     if not phrase:
         raise ValueError("phrase must be non-empty")
     terms = list(phrase)
-    docs = _ensure_parallelism(docs)
-    # filtered to the phrase's terms, then materialized once — every
-    # per-term join branch reads it instead of re-scanning the corpus
-    toks = (docs.select(
+    # filtered to the phrase's terms, then cut — every per-term join
+    # branch reads it instead of re-scanning the corpus
+    toks = share(floor(docs).select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.split(F.trim(F.col(text_col)), WS_CLASS + "+"))
         .alias("pos", "term"))
-        .where(F.col("term").isin(sorted(set(terms))))
-        .localCheckpoint(eager=False))
+        .where(F.col("term").isin(sorted(set(terms)))))
     base = (toks.where(F.col("term") == terms[0])
             .select("_id", F.col("pos").alias("p0")))
     for i, t in enumerate(terms[1:], start=1):

@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .policy import floor, share
+
 
 def quantize_embedding(col, scale: int):
     """array<float> -> array<long>: round(x * scale) per component,
@@ -104,15 +106,11 @@ def kmeans_clusters(vectors: DataFrame, k: int, iters: int = 2,
     integer Lloyd updates; returns (vec_id, cluster).  With unit-norm
     embeddings the quantized squared-Euclidean argmin equals the
     cosine argmax up to the 1/scale grid."""
-    from .dedup import _ensure_parallelism
-    emb = (_ensure_parallelism(vectors)
-           .select(F.col(id_col).alias("vec_id"),
-                   quantize_embedding(F.col(vec_col), scale).alias("q")))
-    # one narrow scan feeds every iteration: avoid re-reading +
-    # re-quantizing.  The parallelism floor must come FIRST — the
-    # checkpoint pins the partitioning, so a single-split scan would
-    # otherwise run every Lloyd iteration on one task.
-    emb = emb.localCheckpoint(eager=False)
+    # one cut scan feeds every iteration; floor FIRST — the cut pins
+    # the partitioning, or every Lloyd iteration runs on one task
+    emb = share(floor(vectors)
+                .select(F.col(id_col).alias("vec_id"),
+                        quantize_embedding(F.col(vec_col), scale).alias("q")))
     seeds = emb.orderBy("vec_id").limit(k)
     cents = seeds.select(
         (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cid"),
@@ -140,14 +138,12 @@ def semantic_dedup(vectors: DataFrame, k: int, iters: int = 2,
     BIGINT (dot ≤ dim·pair_scale²·max|x|² — 2.6e18 at dim 64,
     pair_scale 1e3, |x| ≤ ~0.5 — under the 9.2e18 limit; scale 1e6
     would overflow)."""
-    from .dedup import _ensure_parallelism
     clusters = kmeans_clusters(vectors, k, iters, scale, id_col, vec_col)
-    q3 = _ensure_parallelism(vectors).select(
+    q3 = floor(vectors).select(
         F.col(id_col).alias("vec_id"),
         quantize_embedding(F.col(vec_col), pair_scale).alias("q3"))
-    side = (clusters.join(q3, "vec_id")
-            .withColumn("n2", _int_dot(F.col("q3"), F.col("q3")))
-            .localCheckpoint(eager=False))
+    side = share(clusters.join(q3, "vec_id")
+                 .withColumn("n2", _int_dot(F.col("q3"), F.col("q3"))))
     a = side.select(F.col("vec_id").alias("id_a"), "cluster",
                     F.col("q3").alias("qa"), F.col("n2").alias("na2"))
     b = side.select(F.col("vec_id").alias("id_b"), "cluster",

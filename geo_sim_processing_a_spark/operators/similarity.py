@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .policy import floor, share
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -48,10 +50,9 @@ def brute_topk(vectors: DataFrame, queries: DataFrame, k: int,
     """Exact cosine top-k of each query against all vectors.  The query
     side is broadcast (small); ranking is a window per query; ties by
     vec_id.  All JVM-side."""
-    from .dedup import _ensure_parallelism
-    # parallelism floor: a single-split vector scan would score every
-    # (vector, query) pair on one task (r6: 47 s serial at sf1.0)
-    joined = _ensure_parallelism(vectors).crossJoin(F.broadcast(queries))
+    # a single-split vector scan would score every (vector, query) pair
+    # on one task (r6: 47 s serial at sf1.0)
+    joined = floor(vectors).crossJoin(F.broadcast(queries))
     scored = joined.withColumn(
         "cos", _cosine(F.col(vec_col), F.col(qvec_col)))
     w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.col(id_col))
@@ -138,9 +139,8 @@ def ivf_build_assignments(vectors: DataFrame, dim: int, n_lists: int = 16,
     #4).  TakeOrdered keeps only sample_n rows per partition, so this
     is ONE pass with no count() job and no full sort — works unchanged
     on filtered/derived inputs where a count() would be a full scan."""
-    from .dedup import _ensure_parallelism
-    vectors = _ensure_parallelism(vectors)  # single-split scans would
-    # run the assignment kernel (and the re-rank feed) on one task
+    vectors = floor(vectors)  # single-split scans would run the
+    # assignment kernel (and the re-rank feed) on one task
     sample = np.array(
         [r[0] for r in vectors
          .orderBy(F.xxhash64(F.col(id_col)), id_col).limit(sample_n)
@@ -205,16 +205,10 @@ def lsh_self_near_dup(vectors: DataFrame, dim: int, threshold: float = 0.95,
     join is quadratic per bucket; members of a dropped bucket can
     still be recalled as ``id_a`` through their other probes."""
     from .skew import frequency_cap
-
-    from .dedup import _ensure_parallelism
     bucket = lsh_bucket_udf(dim, n_planes)
-    # local-checkpointed: the bucket UDF would otherwise re-run over
-    # the full vector table for the guard's stats pass AND both join
-    # sides (see dedup.minhash_lsh_pairs for the trade-off note);
-    # parallelism floor first — single-split scans would bucket serially
-    b = (_ensure_parallelism(vectors)
-         .withColumn("bucket", bucket(F.col(vec_col)))
-         .localCheckpoint(eager=False))
+    # cut, or the bucket UDF re-runs for the guard's stats pass AND both
+    # join sides; floor first, or a single split buckets serially
+    b = share(floor(vectors).withColumn("bucket", bucket(F.col(vec_col))))
     # probe buckets: own + each 1-bit flip (multi-probe LSH)
     probes = F.array(F.col("bucket"),
                      *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)])

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..kernels.chordal_axis import ZERO, ChordalAxis
 from ..kernels.tessellate import tessellate
+from .policy import floor
 
 LAYER_SKELETON = 1
 LAYER_TRIANGLE = 2
@@ -75,19 +76,15 @@ def _polygon_rows(url: str, rings: list, correction: bool, out: dict) -> None:
         out["error"].append(err)
 
 
-def chordal_axis_frame(polys: DataFrame, correction: bool = True,
-                       n_parts: int | None = None) -> DataFrame:
+def chordal_axis_frame(polys: DataFrame, correction: bool = True) -> DataFrame:
     """polys(url, xs, ys[, ring_offsets]) -> per-part geometry rows for
     both layers.
 
     The kernel is per-polygon independent, so this is mapInPandas over
-    whole partitions — no groupBy shuffle key needed.  A narrow input
-    (small parquet = one split) is repartitioned to the default
-    parallelism with an EXPLICIT count: AQE's partition coalescing
-    respects user-specified counts, whereas a groupBy here measured
-    being coalesced to ONE task at bench scale (757 rows are 'small'
-    bytes-wise but each costs ~1 ms of Python kernel).  Wide inputs
-    pass through unshuffled."""
+    whole partitions — no groupBy shuffle key needed.  The input gets
+    policy.floor's EXPLICIT partition count, which AQE respects; a
+    groupBy here was coalesced to ONE task at bench scale (757 rows are
+    'small' bytes-wise but each costs ~1 ms of Python kernel)."""
     has_offsets = "ring_offsets" in polys.columns
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -118,10 +115,8 @@ def chordal_axis_frame(polys: DataFrame, correction: bool = True,
             "error": pd.Series(out["error"], dtype="object"),
         })
 
-    from .dedup import _ensure_parallelism
-
     cols = ["url", "xs", "ys"] + (["ring_offsets"] if has_offsets else [])
-    sel = _ensure_parallelism(polys.select(*cols), target=n_parts)
+    sel = floor(polys.select(*cols))
 
     def run(batches):
         for pdf in batches:

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .policy import floor
 from .text import WS_CLASS
 
 
@@ -70,8 +71,7 @@ def _dup_positions(docs: DataFrame, k: int, min_occurrences: int,
     (see _token_gram_slices), ~96 bits against collisions at 10^13
     windows; the DuckDB oracle still groups the gram STRING itself, so
     it remains the standing collision check."""
-    from .dedup import _ensure_parallelism
-    wins = (_ensure_parallelism(docs).select(
+    wins = (floor(docs).select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(_token_gram_slices(_clean_tokens(text_col), k))
         .alias("pos", "gram"))
@@ -136,8 +136,7 @@ def strip_duplicate_spans(docs: DataFrame, k: int = 8,
     sequence explode, the token stream anti-joins them, and the
     surviving tokens concat back in position order — explode, two
     doc_id-keyed shuffles, no UDF."""
-    from .dedup import _ensure_parallelism
-    toks = _ensure_parallelism(docs).select(
+    toks = floor(docs).select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(_clean_tokens(text_col)).alias("pos", "term"))
     covered = (duplicate_spans(docs, k, min_occurrences, id_col, text_col)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import cells as C
+from .policy import floor
 from .spatial_join import knn_brute, pip_refine
 
 
@@ -72,12 +73,9 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 8) -> DataFrame:
     (pid, poly_id, lon, lat).  Polygon side broadcast.  Multi-ring
     polygons (ring_offsets: exterior first, holes after) use even-odd
     semantics — points inside a hole do NOT match."""
-    from .dedup import _ensure_parallelism_if_big
-    # size-conditional parallelism floor: a single-split point scan of
-    # a BIG table would feed the refine from one task; for a small one
-    # the fan-out exchange costs more than it parallelizes (count-sink
-    # A/B at sf0.1: 1.31 s floored vs 0.81 s not)
-    pts = (_ensure_parallelism_if_big(points)
+    # a single-split point scan of a BIG table would feed the refine
+    # from one task
+    pts = (floor(points, if_big=True)
            .withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"),
                                                res)))
     has_offsets = "ring_offsets" in polys.columns
@@ -175,11 +173,10 @@ def knn_join(points: DataFrame, k: int, res: int = 6,
     otherwise run on as few tasks as there are cells.  Keep 1 at scale
     where cells outnumber cores — salting multiplies the candidate
     shuffle bytes by the salt count."""
-    from .dedup import _ensure_parallelism_if_big
     n = 1 << res
     exact_radius2 = min(360.0 / n, 180.0 / n) ** 2
-    # size-conditional parallelism floor: see pip_join
-    queries = (_ensure_parallelism_if_big(points)
+    # see pip_join
+    queries = (floor(points, if_big=True)
                .select("pid", "lon", "lat",
                        _ix_col(F.col("lon"), res).alias("ix"),
                        _iy_col(F.col("lat"), res).alias("iy")))
@@ -472,15 +469,13 @@ def diamond_join(left: DataFrame, right: DataFrame, res: int = 6,
     dedup) with diamond_sat_intersects as the refine — four integer
     separating-axis inequalities, whole-stage codegen, zero Python.
     """
-    from .dedup import _ensure_parallelism
     _require_integral(left, ["acx", "acy", "aw", "ah"], "diamond_join")
     _require_integral(right, ["bcx", "bcy", "bw", "bh"], "diamond_join")
     # small scans arrive as ONE split; the refine predicate then runs
     # single-task however many candidate rows the cell join fans out
-    # (round-5: 18+ s wall vs ~1 CPU busy).  No-op at scale, where the
-    # inputs carry more splits than cores.
-    left = _ensure_parallelism(left)
-    right = _ensure_parallelism(right)
+    # (round-5: 18+ s wall vs ~1 CPU busy)
+    left = floor(left)
+    right = floor(right)
 
     def bbox(p):
         cx, cy, w, h = (F.col(p + c) for c in ("cx", "cy", "w", "h"))
@@ -536,12 +531,11 @@ def segment_join(left: DataFrame, right: DataFrame, res: int = 6,
     Same zero-Python shape as diamond_join: _grid_join over each
     segment's integer bbox, with the exact integer CCW test
     (segments_intersect_cols) as the refine."""
-    from .dedup import _ensure_parallelism
     _require_integral(left, ["ax1", "ay1", "ax2", "ay2"], "segment_join")
     _require_integral(right, ["bx1", "by1", "bx2", "by2"], "segment_join")
     # see diamond_join: probe-side parallelism floor for small scans
-    left = _ensure_parallelism(left)
-    right = _ensure_parallelism(right)
+    left = floor(left)
+    right = floor(right)
 
     def bbox(p):
         x1, y1, x2, y2 = (F.col(p + c) for c in ("x1", "y1", "x2", "y2"))

@@ -10,6 +10,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .policy import floor, share
+
 # tiny per-language stopword marker sets (heuristic language ID)
 LANG_MARKERS = {
     "en": ["the", "and", "of"],
@@ -166,11 +168,9 @@ def winnow_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
     are dropped with a report (operators/skew.py) — the self-join is
     quadratic per fingerprint; a dropped pair loses at most
     ``hot_key_cap``-hot fingerprints from its n_shared count."""
-    from .dedup import _ensure_parallelism
     from .skew import frequency_cap
 
-    fps = (winnow_fingerprints(_ensure_parallelism(docs), id_col, text_col, k, w)
-           .localCheckpoint(eager=False))
+    fps = share(winnow_fingerprints(floor(docs), id_col, text_col, k, w))
     ex = fps.select("doc_id", F.explode("fps").alias("fp"))
     if hot_key_cap is not None:
         ex = frequency_cap(ex, ["fp"], hot_key_cap, "winnowing")
@@ -219,8 +219,7 @@ def ngram_topk(docs: DataFrame, n: int = 3, k: int = 50,
     shuffle is ONE partial+final hash-agg on the gram, and the top-k is
     TakeOrdered (per-partition partial top-k, never a full sort).
     Deterministic tie-break: count desc, gram asc."""
-    from .dedup import _ensure_parallelism
-    g = (_ensure_parallelism(docs)
+    g = (floor(docs)
          .select(F.explode(word_ngrams(F.col(text_col), n)).alias("gram")))
     return (g.groupBy("gram").agg(F.count("*").alias("n"))
             .orderBy(F.desc("n"), F.asc("gram")).limit(k))
@@ -244,8 +243,7 @@ def ngram_contamination(docs: DataFrame, probes: DataFrame, n: int = 5,
                            .alias("gram"))
                    .distinct()
                    .withColumn("_hit", F.lit(1)))
-    from .dedup import _ensure_parallelism
-    doc_grams = (_ensure_parallelism(docs)
+    doc_grams = (floor(docs)
                  .select(F.col(id_col).alias("doc_id"),
                          F.explode(word_ngrams(F.col(text_col), n))
                          .alias("gram")))
@@ -287,11 +285,10 @@ def jaccard_contamination(docs: DataFrame, probes: DataFrame,
                         .alias("gram"))
           .distinct())
     pg_n = pg.groupBy("probe_id").agg(F.count(F.lit(1)).alias("n_probe"))
-    from .dedup import _ensure_parallelism
-    # parallelism floor; dg's top is the distinct Exchange, so the
-    # per-doc size agg and the intersection join share it via in-plan
-    # ReusedExchange — no checkpoint needed
-    dg = (_ensure_parallelism(docs)
+    # dg's top is the distinct Exchange, so the per-doc size agg and
+    # the intersection join share it via in-plan ReusedExchange — no
+    # cut needed
+    dg = (floor(docs)
           .select(F.col(id_col).alias("doc_id"),
                   F.explode(word_ngrams(F.col(text_col), n))
                   .alias("gram"))
@@ -313,23 +310,18 @@ def jaccard_contamination(docs: DataFrame, probes: DataFrame,
 
 
 def repetition_stats(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     ensure_parallelism: bool = True) -> DataFrame:
+                     text_col: str = "text") -> DataFrame:
     """Per-doc repetition signal (Gopher-style quality rule): the share
     of the document's n-grams taken by its single most frequent n-gram.
     Degenerate/boilerplate text scores high; natural text low.
 
     Two-level hash-agg — (doc, gram) counts then per-doc max/sum — both
     partial-aggregated map-side; no UDF anywhere."""
-    from .dedup import _ensure_parallelism
-    # callers whose input is already a small materialized survivor
-    # frame (the curation compositions) pass ensure_parallelism=False:
-    # re-flooring a few hundred checkpointed rows only multiplies task
-    # fan-out (r6 A/B)
-    if ensure_parallelism:
-        docs = _ensure_parallelism(docs)
-    g = docs.select(F.col(id_col).alias("doc_id"),
-                    F.explode(word_ngrams(F.col(text_col), n)).alias("gram"))
+    # JVM-only: re-flooring a small (curation survivor) frame only
+    # multiplies task fan-out
+    g = floor(docs, if_big=True).select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(word_ngrams(F.col(text_col), n)).alias("gram"))
     per_gram = g.groupBy("doc_id", "gram").agg(F.count("*").alias("c"))
     return (per_gram.groupBy("doc_id")
             .agg(F.sum("c").alias("n_grams"),
@@ -372,9 +364,8 @@ def tfidf_keywords(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
     (same bounded-driver-scalar idiom as the epsilon derivation)."""
     from pyspark.sql.window import Window
 
-    from .dedup import _ensure_parallelism
     n_docs = docs.count()
-    toks = _ensure_parallelism(docs).select(
+    toks = floor(docs).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.trim(F.col(text_col)), WS_CLASS + "+"))
         .alias("term")).where(F.col("term") != "")
@@ -483,11 +474,8 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int, overlap: int = 0,
         raise ValueError(
             f"overlap must be in [0, chunk_tokens), got {overlap}")
     stride = chunk_tokens - overlap
-    # size-conditional floor: the scan-stage chunk build of a big
-    # corpus wants one task per core; a small one pays more for the
-    # fan-out than the serial build costs (lm.py A/B pattern)
-    from .dedup import _ensure_parallelism_if_big
-    docs = _ensure_parallelism_if_big(docs)
+    # the scan-stage chunk build of a big corpus wants one task per core
+    docs = floor(docs, if_big=True)
     # NULL text behaves like empty text (one empty chunk) instead of
     # emitting NULL rows whose greatest()/sort semantics differ by
     # engine

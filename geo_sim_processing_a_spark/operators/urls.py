@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .policy import share
+
 TRACKING = r"(utm_[^=&#]*|fbclid|gclid)"
 
 # common two-part public suffixes (approximation; see module docstring)
@@ -204,13 +206,11 @@ def domain_cap(docs: DataFrame, cap: int, domain_col: str = "domain",
     # into the uncapped pass-through (review r5).  \x00 cannot appear
     # in a real registrable domain.
     dkey = F.coalesce(F.col(domain_col), F.lit("\x00")).alias("_dk")
-    # materialize ONCE: three plan branches reference the keyed input
-    # (counts, cold pass-through, hot window) and Spark plans are trees
-    # — without the checkpoint the whole upstream chain runs 3x (r6:
-    # this tripled the synth+regex chain in q_domain_cap/q_curation_web).
-    # No repartition here — a floor after the caller's chain would
-    # compute it serially and then shuffle it; callers floor raw scans.
-    keyed = docs.withColumn("_dk", dkey).localCheckpoint(eager=False)
+    # cut ONCE: three plan branches (counts, cold pass-through, hot
+    # window) would each re-run the upstream chain (r6: it tripled the
+    # synth+regex chain in q_domain_cap/q_curation_web).  No floor:
+    # callers floor raw scans (see curate_web_pages).
+    keyed = share(docs.withColumn("_dk", dkey))
     counts = keyed.groupBy("_dk").agg(F.count("*").alias("_n"))
     hot = counts.where(F.col("_n") > cap).select("_dk")
     cold = keyed.join(F.broadcast(hot), "_dk", "left_anti")

@@ -1225,10 +1225,9 @@ def _pages_from_documents(spark, sf_dir, limit=None):
     if limit:
         d = d.where(F.col("doc_id") < limit)
     # the small documents parquet is ONE split: spread the Python page
-    # synthesis (and everything fused downstream of it) across cores;
-    # no-op at scale where the scan has >= cores splits
-    from ..operators.dedup import _ensure_parallelism
-    d = _ensure_parallelism(d)
+    # synthesis (and everything fused downstream of it) across cores
+    from ..operators.policy import floor
+    d = floor(d)
 
     def gen(batches):
         for pdf in batches:

@@ -328,17 +328,14 @@ def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
         # fixed P*4 at SMALL inputs pays ~0.4 CPU-s of per-task
         # JVM+Python overhead for sub-ms buckets (r6: the transport-
         # only stage cost 63 CPU-s at 128 buckets vs 23 at 32 for the
-        # same 59k rows).  The optimizer's sizeInBytes estimate is
-        # free (no extra job; exact for cached inputs) and sets the
-        # wave count: ~4 MB of geometry per bucket, floored at one
-        # full wave, capped at 4 waves.
+        # same 59k rows).  The optimizer's size estimate is free (no
+        # extra job; exact for cached inputs) and sets the wave count:
+        # ~4 MB of geometry per bucket, floored at one full wave,
+        # capped at 4 waves.
+        from ..operators.policy import size_estimate
         p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        try:
-            size = int(str(geoms_with_cells._jdf.queryExecution()
-                           .optimizedPlan().stats().sizeInBytes()))
-        except Exception:  # noqa: BLE001 - stats are best-effort
-            size = 0
-        if 0 < size < (1 << 50):  # a real estimate, not the unknown cap
+        size = size_estimate(geoms_with_cells)
+        if size:  # a real estimate, not unknown
             n_buckets = max(p, min(p * 4, -(-size // (4 << 20))))
         else:
             n_buckets = p * 4

@@ -202,10 +202,9 @@ def test_curation_udf_free_mapside_dedup(spark):
     dedup is a partial-aggregated min_by (map-side combine), not a
     window sort over every row.  The min_by assertion runs on the dedup
     stage's own plan, since the composition may cut its plan at reuse
-    points (localCheckpoint): the fuzzy/web paths cut only when
-    ``_is_big`` says the survivor frame is big, the exact path of
-    q_curation never cuts.  The composition plan is checked
-    UDF/Window-free."""
+    points (policy.share): the fuzzy/web paths cut their survivor
+    frame, the exact path of q_curation never cuts.  The composition
+    plan is checked UDF/Window-free."""
     from geo_sim_processing_a_spark.operators.curation import dedup_reps
     from geo_sim_processing_a_spark.plans.driver_queries import q_curation
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -218,7 +217,7 @@ def test_curation_udf_free_mapside_dedup(spark):
 
 
 def test_curation_exact_path_reuses_dedup_exchange(spark):
-    """curate_corpus passes materialize=False on the exact path because
+    """curate_corpus does not cut (policy.share) the exact path because
     the dedup's Exchange-topped frame feeds both consumers of
     _quality_and_split and AQE shares it: the executed (isFinalPlan)
     plan must show the second consumer as a ReusedExchange.  If exchange

@@ -35,7 +35,8 @@ def main():
 
     from geo_sim_processing_a_spark.plans.session import get_spark
     from geo_sim_processing_a_spark.operators.dedup import (
-        minhash_signatures, near_dup_clusters, _ensure_parallelism)
+        minhash_signatures, near_dup_clusters)
+    from geo_sim_processing_a_spark.operators.policy import floor
 
     spark = get_spark("skew_proof", cpus=8, shuffle_partitions=16)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
@@ -71,7 +72,7 @@ def main():
     # --- candidate-volume measurement (aggregation, never the join) ---
     n_hashes, bands = 32, 8
     rows_per_band = n_hashes // bands
-    sigs = minhash_signatures(_ensure_parallelism(full), n_hashes=n_hashes)
+    sigs = minhash_signatures(floor(full), n_hashes=n_hashes)
     band_cols = [F.struct(F.lit(bi).alias("band"),
                           F.xxhash64(F.concat_ws(
                               ",", *[F.element_at("sig", bi * rows_per_band + r + 1)
