@@ -6,7 +6,7 @@ test:
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 verify:
-	python tools/verify_oracles.py /root/testdata/sf0.01
+	python tools/verify_strict.py /root/testdata/sf0.01
 
 bench:
 	python bench.py

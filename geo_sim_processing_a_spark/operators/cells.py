@@ -121,57 +121,3 @@ def cover_bbox(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:
     return encode_ixiy(mx.ravel(), my.ravel(), res)
 
 
-def cover_polygon(ring: np.ndarray, res: int) -> np.ndarray:
-    """Cells at ``res`` intersecting a single-ring polygon (X7)."""
-    return cover_polygon_rings([ring], res)
-
-
-def cover_polygon_rings(rings: list, res: int) -> np.ndarray:
-    """Cells at ``res`` intersecting a multi-ring polygon (SURVEY.md
-    X7; exterior first, holes after — even-odd).  Exact: a candidate
-    cell (from the exterior's bbox grid) is kept iff its center is
-    inside the polygon (even-odd over ALL rings, so holes punch out),
-    or any ring edge clips the cell box (vectorized Liang-Barsky over
-    all candidate cells per edge) — a cell strictly inside a hole has
-    neither and is excluded."""
-    from ..geom import primitives as P
-
-    outer = np.asarray(rings[0], dtype=np.float64)
-    xmin, ymin, xmax, ymax = P.bbox(outer)
-    cells = cover_bbox(xmin, ymin, xmax, ymax, res)
-    lon0, lat0, lon1, lat1 = cell_bounds(cells)
-    cx, cy = 0.5 * (lon0 + lon1), 0.5 * (lat0 + lat1)
-    keep = np.zeros(len(cells), dtype=bool)
-    for ring in rings:
-        keep ^= P.points_in_ring(cx, cy, np.asarray(ring, dtype=np.float64))
-
-    all_edges = []
-    for ring in rings:
-        ring = np.asarray(ring, dtype=np.float64)
-        closed = (np.vstack([ring, ring[:1]])
-                  if (ring[0] != ring[-1]).any() else ring)
-        all_edges.append(closed)
-    for closed in all_edges:
-        for k in range(len(closed) - 1):
-            x0, y0 = float(closed[k, 0]), float(closed[k, 1])
-            dx, dy = float(closed[k + 1, 0]) - x0, float(closed[k + 1, 1]) - y0
-            # Liang-Barsky clip of segment against each cell box.
-            # Degenerate axis (dx==0 / dy==0) with the coordinate
-            # OUTSIDE the box gets +inf in BOTH slots so the interval
-            # is empty — a -inf/+inf split collapses to a vacuous
-            # constraint under the min/max below and keeps cells the
-            # edge never reaches (same bug class as the round-3
-            # rasterizer fix in tiling._clip_segments_to_grid)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                in_x = (lon0 <= x0) & (x0 <= lon1)
-                in_y = (lat0 <= y0) & (y0 <= lat1)
-                t0x = np.where(dx != 0, (lon0 - x0) / dx, np.where(in_x, -np.inf, np.inf))
-                t1x = np.where(dx != 0, (lon1 - x0) / dx, np.where(in_x, np.inf, np.inf))
-                t0y = np.where(dy != 0, (lat0 - y0) / dy, np.where(in_y, -np.inf, np.inf))
-                t1y = np.where(dy != 0, (lat1 - y0) / dy, np.where(in_y, np.inf, np.inf))
-            tx_lo, tx_hi = np.minimum(t0x, t1x), np.maximum(t0x, t1x)
-            ty_lo, ty_hi = np.minimum(t0y, t1y), np.maximum(t0y, t1y)
-            t_enter = np.maximum(np.maximum(tx_lo, ty_lo), 0.0)
-            t_exit = np.minimum(np.minimum(tx_hi, ty_hi), 1.0)
-            keep |= t_enter <= t_exit
-    return np.sort(cells[keep])

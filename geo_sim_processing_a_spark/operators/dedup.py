@@ -1,5 +1,5 @@
-"""Deduplication operators (task brief): exact, MinHash+LSH, SimHash,
-n-gram Jaccard, embedding-cosine near-dup.
+"""Deduplication operators (task brief): exact, MinHash+LSH (exact
+n-gram Jaccard verify), SimHash, embedding-cosine near-dup.
 
 Shapes chosen for 100 TB scale:
  - exact dedup is one hash-aggregate (partial+final, no UDF);
@@ -181,18 +181,6 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     return (pairs.withColumn("jaccard", inter.cast("double") / union)
             .where(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
-
-
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", shingle: int = 3,
-                        threshold: float = 0.7,
-                        hot_key_cap: int | None = None) -> DataFrame:
-    """Exact n-gram Jaccard over LSH candidates (alias of the verified
-    MinHash path with enough bands to make recall ~1 at the
-    threshold)."""
-    return minhash_lsh_pairs(docs, id_col, text_col, n_hashes=64, bands=32,
-                             shingle=shingle, threshold=threshold,
-                             hot_key_cap=hot_key_cap)
 
 
 def near_dup_clusters(docs: DataFrame, id_col: str = "doc_id",

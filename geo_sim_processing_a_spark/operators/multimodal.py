@@ -168,30 +168,6 @@ def extract_media_features(media: DataFrame, blob_col: str = "blob",
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def resize_images(media: DataFrame, out_h: int, out_w: int,
-                  blob_col: str = "blob") -> DataFrame:
-    """RESIZE stage: decode BMP -> nearest-neighbor resize -> re-encode
-    BMP, all inside one Arrow batch kernel; non-images pass through."""
-    def run(batches):
-        for pdf in batches:
-            blobs = []
-            for b in pdf[blob_col]:
-                bb = bytes(b or b"")
-                if bb[:2] == b"BM":
-                    try:
-                        bb = encode_bmp(resize_nearest(decode_bmp(bb), out_h, out_w))
-                    except Exception:  # noqa: BLE001 — pass through corrupt rows
-                        pass
-                blobs.append(bb)
-            out = pdf.copy()
-            out[blob_col] = pd.Series(blobs, dtype=object)
-            yield out
-
-    # pass the StructType verbatim — a simpleString round-trip drops
-    # nullability and breaks on names the DDL parser can't re-read
-    return media.mapInPandas(run, media.schema)
-
-
 def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame-sampling PLAN for video/audio rows with a duration: emits
     (url, frame_ts_ms) rows JVM-side from the flat MEDIA_SCHEMA

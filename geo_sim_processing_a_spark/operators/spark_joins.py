@@ -1,20 +1,19 @@
 """DataFrame-level spatial joins (SURVEY.md X8/X9) — filter-refine:
 coarse Catalyst hash-join on a grid cell, exact refine per candidate.
 Every cell key is computed JVM-side (cell_encode_col / _grid_index_col,
-bit-twins of operators/cells.py); Python runs only where the refine or
-the exact polygon cover needs NumPy.
+bit-twins of operators/cells.py); Python runs only in the kNN refine.
 
-X8 broadcast point-in-polygon join:
-    polygons -> exact cover cells (tiny dim side, NumPy) -> broadcast
-    points   -> Morton cell (JVM)                        -> equi-join
-             -> PIP refine (NumPy)
+X8 broadcast point-in-polygon join (pip_join), through _grid_join:
+    polygons -> bbox cover into (ix, iy) cells (tiny dim side) -> broadcast
+    points   -> their one (ix, iy) cell                        -> equi-join
+             -> even-odd crossing-number refine (_pip_col, a Column)
 X9 cell-local kNN:
     points keyed on their raw grid cell (ix, iy); candidates replicated
     to the ring-1 neighborhood by a 9-offset explode; queries and
     candidates cogrouped on that cell into a brute-force NumPy refine
     (exact within cell+ring1 — callers pick the resolution so the k-th
     neighbor distance < one cell size).
-Extended geometries (range_join, diamond_join, segment_join):
+Extended geometries (range_join, diamond_join, segment_join) and pip:
     one primitive, _grid_join — bbox cover into (ix, iy) cells, equi-join,
     bbox prefilter, reference-point dedup, Column refine; no Python.
 """
@@ -25,14 +24,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from . import cells as C
 from .policy import floor
-from .spatial_join import knn_brute, pip_refine
-
-
-from ..geom.primitives import split_rings as _split_rings  # shared decoder
+from .spatial_join import knn_brute
 
 
 def cell_parent_col(cell, steps: int = 1):
@@ -72,64 +66,65 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 8) -> DataFrame:
     """points(pid, lon, lat) x polys(poly_id, xs, ys[, ring_offsets]) ->
     (pid, poly_id, lon, lat).  Polygon side broadcast.  Multi-ring
     polygons (ring_offsets: exterior first, holes after) use even-odd
-    semantics — points inside a hole do NOT match."""
+    semantics — points inside a hole do NOT match.
+
+    Scale shape: _grid_join of each point's degenerate bbox against
+    each polygon's bbox, with the crossing-number parity (_pip_col) as
+    the refine — a point covers exactly one (ix, iy) cell, so the
+    refine and the dedup both run inside the broadcast join's stage,
+    with no key shuffle and no Python."""
     # a single-split point scan of a BIG table would feed the refine
     # from one task
-    pts = (floor(points, if_big=True)
-           .withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"),
-                                               res)))
-    has_offsets = "ring_offsets" in polys.columns
+    pts = floor(points, if_big=True)
+    lon, lat = F.col("lon"), F.col("lat")
+    offs = (F.col("ring_offsets") if "ring_offsets" in polys.columns
+            else F.lit(None))
+    return _grid_join(
+        (pts, (lon, lat, lon, lat)),
+        (F.broadcast(polys), (F.array_min("xs"), F.array_min("ys"),
+                              F.array_max("xs"), F.array_max("ys"))),
+        res, ["pid", "poly_id", "lon", "lat"],
+        refine=_pip_col(lon, lat, F.col("xs"), F.col("ys"), offs))
 
-    if has_offsets:
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def cover_udf(xs: pd.Series, ys: pd.Series, offs: pd.Series) -> pd.Series:
-            out = []
-            for x, y, o in zip(xs, ys, offs):
-                rings = _split_rings(np.asarray(x, float), np.asarray(y, float),
-                                     o if o is not None else [0])
-                out.append([int(c) for c in C.cover_polygon_rings(rings, res)])
-            return pd.Series(out)
 
-        pol_cells = polys.withColumn(
-            "cell", F.explode(cover_udf("xs", "ys", "ring_offsets")))
-    else:
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def cover_udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            out = []
-            for x, y in zip(xs, ys):
-                ring = np.column_stack([np.asarray(x, float), np.asarray(y, float)])
-                out.append([int(c) for c in C.cover_polygon(ring, res)])
-            return pd.Series(out)
+def _pip_col(px, py, xs, ys, offs):
+    """Even-odd point-in-polygon test as a boolean Column: the crossing
+    count over every edge of every ring is odd.  Ring r spans
+    [offs[r], offs[r+1]) of xs/ys (the last ends at size(xs)); its
+    edges are k -> k+1 plus the wrap edge e-1 -> s, which has zero
+    length on a closed ring and never crosses.  A null ``offs`` means
+    one ring, array(0).  Counting over ALL rings punches holes out.
 
-        pol_cells = polys.withColumn("cell", F.explode(cover_udf("xs", "ys")))
+    Preconditions of its bit-parity with geom.primitives.points_in_ring:
+      - each edge test keeps that function's exact expression and
+        operation order, ``(y0 > py) != (y1 > py)`` and
+        ``px < x0 + ((py - y0) * (x1 - x0)) / (y1 - y0)``, so the same
+        doubles decide on both sides;
+      - the division sits under ``F.when(crossing, ...)``, which
+        guarantees y0 != y1, so ANSI mode's divide-by-zero error cannot
+        fire."""
+    offs = F.coalesce(offs.cast("array<int>"), F.array(F.lit(0)))
+    n, nr = F.size(xs), F.size(offs)
 
-    joined = pts.join(F.broadcast(pol_cells), on="cell", how="inner")
+    def ring(count, r):
+        s = F.get(offs, r)
+        e = F.when(r + 1 < nr, F.get(offs, r + 1)).otherwise(n)
 
-    def refine(pdf: pd.DataFrame) -> pd.DataFrame:
-        keep = []
-        for (poly_id,), grp in pdf.groupby(["poly_id"], sort=True):
-            x = np.asarray(grp["xs"].iloc[0], float)
-            y = np.asarray(grp["ys"].iloc[0], float)
-            offs = (grp["ring_offsets"].iloc[0]
-                    if has_offsets and grp["ring_offsets"].iloc[0] is not None
-                    else [0])
-            px = grp["lon"].to_numpy()
-            py = grp["lat"].to_numpy()
-            inside = np.zeros(len(grp), dtype=bool)
-            for ring in _split_rings(x, y, offs):  # even-odd: holes punch out
-                inside ^= pip_refine(px, py, ring)
-            keep.append(grp.loc[inside, ["pid", "poly_id", "lon", "lat"]])
-        if keep:
-            return pd.concat(keep, ignore_index=True)
-        return pd.DataFrame({"pid": [], "poly_id": [], "lon": [], "lat": []})
+        def edge(c, k):
+            j = F.when(k + 1 < e, k + 1).otherwise(s)
+            x0, y0 = F.get(xs, k), F.get(ys, k)
+            x1, y1 = F.get(xs, j), F.get(ys, j)
+            crossing = (y0 > py) != (y1 > py)
+            hit = F.when(crossing,
+                         px < x0 + ((py - y0) * (x1 - x0)) / (y1 - y0))
+            return c + F.when(hit, 1).otherwise(0)
 
-    # dedup-by-construction: a point encodes to exactly ONE cell, so a
-    # (pid, poly_id) pair can only form in that cell — a distinct here
-    # would be a full extra exchange that can never remove anything
-    # (plan-gated in tests/test_plans.py: one shuffle after the
-    # broadcast join)
-    return (joined.groupBy("cell")
-            .applyInPandas(refine, "pid long, poly_id long, lon double, lat double"))
+        # step 1: an empty ring (e == s) raises, as points_in_ring does,
+        # instead of counting down into the previous ring's vertices
+        return F.aggregate(F.sequence(s, e - 1, F.lit(1)), count, edge)
+
+    crossings = F.aggregate(F.sequence(F.lit(0), nr - 1), F.lit(0), ring)
+    return crossings % 2 == 1
 
 
 def range_join(left: DataFrame, right: DataFrame, res: int = 6,

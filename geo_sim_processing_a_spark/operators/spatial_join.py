@@ -1,23 +1,15 @@
-"""Tile-local spatial-join kernels (SURVEY.md §2.4 X8-X10).
+"""The cell-local kNN refine kernel (SURVEY.md §2.4 X9).
 
-These run inside ``applyInPandas`` after the coarse cell-equi-join has
-co-located candidates (the classic filter-refine spatial join): the
-cell join is a Catalyst hash join; the exact refine below is
-vectorized NumPy.
+spark_joins.knn_join cogroups each cell's queries with its ring-1
+candidates and runs knn_brute on them inside ``applyInPandas``: the
+cell keys and the candidate replication are Catalyst, the exact refine
+below is vectorized NumPy.  The other spatial joins refine with Column
+expressions and need no kernel here.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-from ..geom import primitives as P
-
-
-def pip_refine(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Exact point-in-polygon refine for one polygon over candidate
-    points (strict crossing-number parity; boundary-free data by
-    construction in the pipeline)."""
-    return P.points_in_ring(np.asarray(px, float), np.asarray(py, float), ring)
 
 
 def knn_brute(qx: np.ndarray, qy: np.ndarray, px: np.ndarray, py: np.ndarray,

@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 from ..geom.epsilon import Epsilon
 from ..kernels import reduce_bend as RBK
 from ..kernels.simplify import simplify_feature
-from ..operators import cells as C
-from ..operators.tiling import salt_by_cell, with_cell_cover
+from ..operators.tiling import salt_by_cell
 from ..sources import manifest as MF
 from ..sources.pages import extract_text_series, synthesize_geoms_pdf
 
@@ -82,27 +81,28 @@ def extracted_text_parity(pages: DataFrame) -> DataFrame:
                         (extract_udf("html") == F.col("text")).alias("ok"))
 
 
+def _url_hashes(pages: DataFrame) -> DataFrame:
+    """(url, h): h = xxhash64 of the doc id parsed from the url,
+    computed JVM-side so Catalyst prunes/pushes around it."""
+    return (pages
+            .withColumn("doc_id", F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long"))
+            .withColumn("h", F.xxhash64("doc_id"))
+            # Spark cannot column-prune INTO mapInPandas: without this
+            # select the corpus's biggest columns (html, text) would
+            # round-trip JVM->Arrow->Python just to be dropped
+            .select("url", "h"))
+
+
 def pages_to_geoms(pages: DataFrame) -> DataFrame:
     """P10 — geocode pages into multi-ring geometry rows (points,
     footprint polygons for pmod(h,7)==0 — holed when pmod(h,21)==0 —
-    and trace polylines for pmod(h,3)==0).
-
-    h is computed JVM-side (xxhash64 of the doc id parsed from the
-    url) so Catalyst prunes/pushes around it; the geometry synthesis is
+    and trace polylines for pmod(h,3)==0).  The geometry synthesis is
     one batch-vectorized Arrow kernel (sources/pages.py)."""
-    with_h = (pages
-              .withColumn("doc_id", F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long"))
-              .withColumn("h", F.xxhash64("doc_id"))
-              # Spark cannot column-prune INTO mapInPandas: without this
-              # select the corpus's biggest columns (html, text) would
-              # round-trip JVM->Arrow->Python just to be dropped
-              .select("url", "h"))
-
     def gen(batches):
         for pdf in batches:
             yield synthesize_geoms_pdf(pdf["url"].to_numpy(), pdf["h"].to_numpy())
 
-    return with_h.mapInPandas(gen, GEOM_SCHEMA)
+    return _url_hashes(pages).mapInPandas(gen, GEOM_SCHEMA)
 
 
 def pages_to_covered_geoms(pages: DataFrame, res: int) -> DataFrame:
@@ -113,18 +113,13 @@ def pages_to_covered_geoms(pages: DataFrame, res: int) -> DataFrame:
     Python worker per task and halves the Arrow transport."""
     from ..operators.tiling import _cover_batch
 
-    with_h = (pages
-              .withColumn("doc_id", F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long"))
-              .withColumn("h", F.xxhash64("doc_id"))
-              # prune BEFORE the Arrow boundary (see pages_to_geoms)
-              .select("url", "h"))
-
     def gen(batches):
         for pdf in batches:
             geoms = synthesize_geoms_pdf(pdf["url"].to_numpy(), pdf["h"].to_numpy())
             yield _cover_batch(geoms, res)
 
-    return with_h.mapInPandas(gen, GEOM_SCHEMA + ", cell long, is_owner boolean")
+    return _url_hashes(pages).mapInPandas(
+        gen, GEOM_SCHEMA + ", cell long, is_owner boolean")
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,6 @@ two-parallelism scaling benchmark to compare equal work."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .pages import generate_pages_pdf
 
@@ -24,8 +23,3 @@ def build_pages(spark: SparkSession, n_rows: int, partitions: int | None = None)
             yield generate_pages_pdf(pdf["id"].to_numpy())
 
     return base.mapInPandas(gen, PAGES_SCHEMA)
-
-
-def write_pages_parquet(spark: SparkSession, n_rows: int, path: str,
-                        partitions: int | None = None) -> None:
-    build_pages(spark, n_rows, partitions).write.mode("overwrite").parquet(path)

@@ -58,26 +58,6 @@ def test_cover_bbox():
     assert (y1 >= -1.0).all() and (y0 <= 1.0).all()
 
 
-def test_cover_polygon_contains_point_cells():
-    ring = np.array([(0, 0), (3, 0), (3, 2), (0, 2), (0, 0)], dtype=np.float64)
-    res = 10
-    cov = set(cells.cover_polygon(ring, res).tolist())
-    rng = np.random.RandomState(11)
-    px = rng.uniform(0.01, 2.99, 500)
-    py = rng.uniform(0.01, 1.99, 500)
-    pc = cells.encode(px, py, res)
-    assert set(pc.tolist()) <= cov
-
-
-def test_cover_polygon_thin_triangle():
-    ring = np.array([(0, 0), (5, 0.01), (5, 0.02), (0, 0)], dtype=np.float64)
-    cov = cells.cover_polygon(ring, 12)
-    assert len(cov) > 0
-    # all vertices' cells are covered
-    vc = cells.encode(ring[:, 0], ring[:, 1], 12)
-    assert set(vc.tolist()) <= set(cov.tolist())
-
-
 def test_cell_parent_col_matches_numpy(spark):
     """JVM bit-twiddled parent == cells.parent, including across
     multi-step chains (level-2 parent = parent(parent))."""

@@ -51,18 +51,19 @@ def test_pip_join_broadcasts_polygons(spark):
 
 
 def test_pip_join_single_exchange_after_broadcast(spark):
-    """PIP join dedups by construction (one cell per point): exactly
-    ONE hash-partitioned Exchange (the groupBy(cell) into the refine
-    kernel) and no post-refine distinct (round-3 VERDICT item #2).
-    Since r6 a round-robin parallelism-floor exchange may precede the
-    scan (single-split inputs; no-op at scale) — it is not a
-    key-shuffle and stays excluded from the count."""
+    """PIP join dedups by construction (one cell per point) and
+    refines inside the broadcast join, so NO hash-partitioned Exchange
+    is left: no key shuffle into a refine kernel and no post-refine
+    distinct (round-3 VERDICT item #2).  Since r6 a round-robin
+    parallelism-floor exchange may precede the scan (single-split
+    inputs; no-op at scale) — it is not a key-shuffle and stays
+    excluded from the count."""
     from geo_sim_processing_a_spark.plans.driver_queries import (
         _boxes_from_nation, _points_from_orders)
     from geo_sim_processing_a_spark.operators.spark_joins import pip_join
     df = pip_join(_points_from_orders(spark, SF_DIR), _boxes_from_nation(spark, SF_DIR))
     plan = plan_of(df)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 0, plan
     n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert n_shuffles <= 2, plan
 
@@ -298,15 +299,3 @@ def test_knn_plan_python_only_in_refine(spark):
     from geo_sim_processing_a_spark.plans.driver_queries import q_knn
     plan = plan_of(q_knn(spark, SF_DIR))
     assert _python_nodes(plan) == ["FlatMapCoGroupsInPandas"], plan
-
-
-def test_pip_join_plan_python_only_cover_and_refine(spark):
-    """pip encodes its points JVM-side: the one ArrowEvalPython left is
-    the exact polygon cover on the broadcast side, plus the NumPy
-    refine."""
-    from geo_sim_processing_a_spark.plans.driver_queries import q_pip_join
-    plan = plan_of(q_pip_join(spark, SF_DIR))
-    assert sorted(_python_nodes(plan)) == [
-        "ArrowEvalPython", "FlatMapGroupsInPandas"], plan
-    assert "cover_udf" in next(t for _, t in _tree_nodes(plan)
-                               if t.startswith("ArrowEvalPython")), plan

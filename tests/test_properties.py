@@ -66,42 +66,6 @@ def test_vw_properties(coords, area_tol):
         assert (areas >= area_tol - 1e-12).all() or len(out) == len(line)
 
 
-@given(st.lists(st.tuples(st.floats(1.0, 40.0, allow_nan=False),
-                          st.floats(1.0, 40.0, allow_nan=False)),
-                min_size=3, max_size=8),
-       st.integers(3, 5))
-@settings(max_examples=60, deadline=None)
-def test_cover_polygon_superset_of_sampled_interior(coords, res):
-    """Property: every cell containing a point strictly inside the
-    polygon (sampled at edge midpoints pulled toward the centroid and
-    at the vertex/centroid blend) is in cover_polygon's output, and
-    every covered cell intersects the polygon's bbox."""
-    import numpy as np
-    from geo_sim_processing_a_spark.operators import cells as C
-    from geo_sim_processing_a_spark.geom import primitives as P
-
-    ring = np.array(coords + [coords[0]], dtype=np.float64)
-    if abs(P.signed_area(ring[:-1])) < 1e-6:
-        return  # degenerate
-    cover = set(int(c) for c in C.cover_polygon(ring, res))
-    assert cover, "non-degenerate polygon must cover at least one cell"
-    cx, cy = ring[:-1, 0].mean(), ring[:-1, 1].mean()
-    # sample interior points: blend vertices toward the centroid
-    for t in (0.2, 0.5, 0.8):
-        px = ring[:-1, 0] * (1 - t) + cx * t
-        py = ring[:-1, 1] * (1 - t) + cy * t
-        inside = P.points_in_ring(px, py, ring)
-        if inside.any():
-            cells = C.encode(px[inside], py[inside], res)
-            for cell in cells:
-                assert int(cell) in cover, (t, res)
-    # soundness: covered cells lie within one cell of the bbox
-    lon0, lat0, lon1, lat1 = C.cell_bounds(np.array(sorted(cover)))
-    xmin, ymin, xmax, ymax = P.bbox(ring)
-    assert (lon1 >= xmin).all() and (lon0 <= xmax).all()
-    assert (lat1 >= ymin).all() and (lat0 <= ymax).all()
-
-
 # ---------------------------------------------------------------------------
 # round-4 curation ops: pure-Python reference parity (no Spark session —
 # the Column expressions are exercised end-to-end by the oracle queries;

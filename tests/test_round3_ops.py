@@ -125,34 +125,6 @@ def test_pip_join_holed_polygon(spark):
     assert got == {1}, got
 
 
-def test_cover_polygon_rings_hole_punchout():
-    """A cell strictly inside a hole is NOT covered; ring cells are."""
-    from geo_sim_processing_a_spark.operators import cells as C
-
-    res = 4  # 22.5 x 11.25 degree cells
-    lon0, lat0 = 0.0, 0.0
-    # exterior spans 3x3 cells; hole exactly covers the middle cell's
-    # interior with margin
-    w, h = 22.5, 11.25
-    ex = [(lon0 + 0.2 * w, lat0 + 0.2 * h), (lon0 + 2.8 * w, lat0 + 0.2 * h),
-          (lon0 + 2.8 * w, lat0 + 2.8 * h), (lon0 + 0.2 * w, lat0 + 2.8 * h),
-          (lon0 + 0.2 * w, lat0 + 0.2 * h)]
-    hole = [(lon0 + 0.9 * w, lat0 + 0.9 * h), (lon0 + 0.9 * w, lat0 + 2.1 * h),
-            (lon0 + 2.1 * w, lat0 + 2.1 * h), (lon0 + 2.1 * w, lat0 + 0.9 * h),
-            (lon0 + 0.9 * w, lat0 + 0.9 * h)]
-    cover = set(int(c) for c in C.cover_polygon_rings(
-        [np.array(ex), np.array(hole)], res))
-    mid = int(C.encode(np.array([lon0 + 1.5 * w]),
-                       np.array([lat0 + 1.5 * h]), res)[0])
-    corner = int(C.encode(np.array([lon0 + 0.5 * w]),
-                          np.array([lat0 + 0.5 * h]), res)[0])
-    assert corner in cover
-    assert mid not in cover, "cell inside the hole must not be covered"
-    # without the hole, the middle cell IS covered
-    cover_solid = set(int(c) for c in C.cover_polygon(np.array(ex), res))
-    assert mid in cover_solid
-
-
 def test_connected_components_long_path(spark):
     """A 300-vertex path converges to one component well inside
     max_iter — pointer jumping makes rounds O(log n), not O(n)."""
@@ -192,33 +164,6 @@ def test_dedup_clusters_canonical_flags(spark):
     assert rows == {0: (0, True), 1: (0, False), 2: (0, False),
                     3: (3, True),  # singleton: own cluster, canonical
                     4: (4, True), 5: (4, False)}
-
-
-def test_cover_polygon_excludes_untouched_corner():
-    """A right triangle spanning a 3x3 cell block must NOT cover the
-    far corner cell: pre-fix, the triangle's axis-parallel legs
-    (outside that cell's row/column range) clipped vacuously and kept
-    it (same degenerate-axis Liang-Barsky bug as the rasterizer's)."""
-    from geo_sim_processing_a_spark.operators import cells as C
-
-    res = 6
-    base = C.encode(np.array([10.0]), np.array([10.0]), res)
-    lo0, la0, lo1, la1 = C.cell_bounds(base)
-    lo0, la0 = float(lo0[0]), float(la0[0])
-    w, h = float(lo1[0]) - lo0, float(la1[0]) - la0
-    # triangle legs on the left/bottom of a 3x3 block; hypotenuse cuts
-    # the diagonal; the top-right cell (+2,+2) is untouched
-    ring = np.array([
-        (lo0 + 0.1 * w, la0 + 0.1 * h),
-        (lo0 + 2.9 * w, la0 + 0.1 * h),
-        (lo0 + 0.1 * w, la0 + 2.9 * h),
-        (lo0 + 0.1 * w, la0 + 0.1 * h)])
-    cover = set(int(c) for c in C.cover_polygon(ring, res))
-    corner = int(C.encode(np.array([lo0 + 2.5 * w]), np.array([la0 + 2.5 * h]), res)[0])
-    inside = int(C.encode(np.array([lo0 + 0.5 * w]), np.array([la0 + 0.5 * h]), res)[0])
-    assert inside in cover
-    assert corner not in cover, "axis-parallel legs leaked into the far corner"
-    assert len(cover) == 8  # 3x3 block minus the untouched corner
 
 
 def test_lang_id_cross_engine_on_multi_marker_text(spark, tmp_path):

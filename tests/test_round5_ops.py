@@ -1727,7 +1727,8 @@ def _bbox_overlap(a, b):
 
 
 @pytest.mark.parametrize("name", ["q_poly_join", "q_segment_join",
-                                   "q_range_join", "q_cell_encode"])
+                                   "q_range_join", "q_cell_encode",
+                                   "q_pip_join"])
 def test_join_plan_fully_jvm(spark, name):
     """The whole plan contains NO Python stage (no BatchEvalPython /
     ArrowEvalPython / mapInPandas / pandas group kernels) — cell keys,

@@ -35,17 +35,87 @@ def make_polys(spark, m=40, seed=7):
             rings)
 
 
-def test_pip_join_matches_bruteforce(spark):
+def make_ring_polys(spark, n=3000, seed=13):
+    """Polygons in flat (xs, ys, ring_offsets) form: an unclosed
+    pentagon, a square with two holes (one unclosed), a row with NULL
+    ring_offsets (one unclosed ring), and an unclosed U with horizontal
+    edges.  Points: uniform over the extent, plus points whose lat
+    equals a vertex y, points on every horizontal edge, and the
+    vertices themselves."""
+    polys = {
+        0: ([0.0, 4.0, 5.0, 2.0, -1.0], [0.0, 0.0, 3.0, 5.0, 3.0], [0]),
+        1: ([10.0, 20.0, 20.0, 10.0, 10.0, 12.0, 14.0, 14.0, 12.0,
+             16.0, 16.0, 18.0, 18.0, 16.0],
+            [0.0, 0.0, 10.0, 10.0, 0.0, 2.0, 2.0, 4.0, 4.0,
+             5.0, 8.0, 8.0, 5.0, 5.0], [0, 5, 9]),
+        2: ([-5.0, 0.0, 3.0], [-5.0, -8.0, -2.0], None),
+        3: ([22.0, 28.0, 28.0, 26.0, 26.0, 24.0, 24.0, 22.0],
+            [0.0, 0.0, 6.0, 6.0, 2.0, 2.0, 6.0, 6.0], [0]),
+    }
+    rng = np.random.RandomState(seed)
+    lon = list(rng.uniform(-6.0, 29.0, n))
+    lat = list(rng.uniform(-9.0, 11.0, n))
+    all_x = [x for xs, _, _ in polys.values() for x in xs]
+    all_y = [y for _, ys, _ in polys.values() for y in ys]
+    for y in sorted(set(all_y)):                  # lat on a vertex y
+        lon += list(rng.uniform(-6.0, 29.0, 60))
+        lat += [y] * 60
+    for xs, ys, _ in polys.values():              # on horizontal edges
+        for k in range(len(xs)):
+            j = (k + 1) % len(xs)
+            if ys[k] == ys[j] and xs[k] != xs[j]:
+                lon += list(rng.uniform(min(xs[k], xs[j]), max(xs[k], xs[j]), 20))
+                lat += [ys[k]] * 20
+    lon, lat = np.array(lon + all_x), np.array(lat + all_y)
+    pts = spark.createDataFrame(
+        [(i, float(lon[i]), float(lat[i])) for i in range(len(lon))],
+        "pid long, lon double, lat double")
+    df = spark.createDataFrame(
+        [(j, xs, ys, offs) for j, (xs, ys, offs) in polys.items()],
+        "poly_id long, xs array<double>, ys array<double>, ring_offsets array<int>")
+    rings = {j: P.split_rings(xs, ys, offs if offs is not None else [0])
+             for j, (xs, ys, offs) in polys.items()}
+    return pts, lon, lat, df, rings
+
+
+def _rect_fixture(spark):
     pts, lon, lat = make_points(spark)
     polys, rings = make_polys(spark)
+    return pts, lon, lat, polys, {j: [r] for j, r in rings.items()}
+
+
+@pytest.mark.parametrize("fixture", ["rects", "rings"])
+def test_pip_join_matches_bruteforce(spark, fixture):
+    """pip_join == P.points_in_ring XOR-ed over each polygon's rings
+    (even-odd), over rotated rectangles and over multi-ring polygons
+    with unclosed rings, holes, NULL ring_offsets and points on vertex
+    latitudes and horizontal edges."""
+    make = _rect_fixture if fixture == "rects" else make_ring_polys
+    pts, lon, lat, polys, rings = make(spark)
     got = {(r["pid"], r["poly_id"]) for r in pip_join(pts, polys, res=8).collect()}
     exp = set()
-    for j, ring in rings.items():
-        inside = P.points_in_ring(lon, lat, ring)
+    for j, poly in rings.items():
+        inside = np.zeros(len(lon), dtype=bool)
+        for ring in poly:
+            inside ^= P.points_in_ring(lon, lat, ring)
         for i in np.flatnonzero(inside):
             exp.add((int(i), j))
     assert got == exp
     assert len(exp) > 100  # non-trivial fixture
+    assert {j for _, j in exp} == set(rings)  # every polygon matches
+
+
+def test_pip_join_empty_ring_raises(spark):
+    """An empty ring (repeated ring offset) fails loudly, as
+    P.points_in_ring does on it, instead of reading an edge that joins
+    the previous ring's last vertex to the next ring's first."""
+    pts = spark.createDataFrame([(1, 1.0, 1.0)], "pid long, lon double, lat double")
+    polys = spark.createDataFrame(
+        [(1, [0.0, 8.0, 8.0, 0.0, 3.0, 3.0, 5.0],
+          [0.0, 0.0, 8.0, 8.0, 3.0, 5.0, 5.0], [0, 4, 4])],
+        "poly_id long, xs array<double>, ys array<double>, ring_offsets array<int>")
+    with pytest.raises(Exception, match="Illegal sequence boundaries"):
+        pip_join(pts, polys, res=6).collect()
 
 
 def _assert_knn_matches_bruteforce(pts, lon, lat, k, res):

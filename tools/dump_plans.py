@@ -36,7 +36,7 @@ def main():
 
     dump("q01_pricing_summary", Q.q01_pricing_summary(spark, SF_DIR))
     dump("q05_nation_volume (broadcast dim join)", Q.q05_nation_volume(spark, SF_DIR))
-    dump("q_pip_join (broadcast PIP, filter-refine)", Q.q_pip_join(spark, SF_DIR))
+    dump("q_pip_join (broadcast grid join, Column even-odd refine)", Q.q_pip_join(spark, SF_DIR))
 
     pages = build_pages(spark, 2000, partitions=4)
     covered = pages_to_covered_geoms(pages.dropDuplicates(["url"]), res=6).persist()
