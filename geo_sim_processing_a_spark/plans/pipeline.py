@@ -126,167 +126,146 @@ def pages_to_covered_geoms(pages: DataFrame, res: int) -> DataFrame:
 # KERNEL: per-tile simplification
 # ---------------------------------------------------------------------------
 
-from ..geom.primitives import split_rings as _split_rings  # shared decoder
+def _bucket_rings(xs, ys, offsets):
+    """Every row's rings as (n,2) views of ONE coordinate array: the
+    flat xs/ys of the bucket are concatenated once and each ring is a
+    slice (``ring_offsets`` holds each ring's start within its row)."""
+    xy = np.column_stack([np.concatenate(xs, dtype=np.float64),
+                          np.concatenate(ys, dtype=np.float64)])
+    row_len = np.fromiter(map(len, xs), np.int64, len(xs))
+    row_start = np.cumsum(row_len) - row_len
+    n_rings = np.fromiter(map(len, offsets), np.int64, len(offsets))
+    start = np.repeat(row_start, n_rings) + np.concatenate(offsets).astype(np.int64)
+    end = np.repeat(row_start + row_len, n_rings)
+    inner = np.ones(len(start), bool)
+    inner[np.cumsum(n_rings) - 1] = False  # a row's last ring ends with the row
+    end[inner] = start[1:][inner[:-1]]
+    views = [xy[lo:hi] for lo, hi in zip(start.tolist(), end.tolist())]
+    first = (np.cumsum(n_rings) - n_rings).tolist()
+    return [views[f:f + k] for f, k in zip(first, n_rings.tolist())]
 
 
-def _flatten_rings(rings: list):
-    """list of (n,2) ring arrays -> (xs list, ys list, offsets list)."""
-    xs = np.concatenate([r[:, 0] for r in rings])
-    ys = np.concatenate([r[:, 1] for r in rings])
-    lens = [len(r) for r in rings]
-    offs = [0]
-    for ln in lens[:-1]:
-        offs.append(offs[-1] + ln)
-    return xs.tolist(), ys.tolist(), offs
+_COUNTERS = ("n_pass", "n_bend_reduced", "n_line_smooth", "n_hole_del", "n_pol_del")
 
 
-def _reduce_bend_tile(cell, urls, kinds, xs, ys, offsets, owners,
-                      diameter_tol: float, smooth: bool, out: dict,
-                      epsilon=WORLD_EPS, flag_del_outer: bool = False,
-                      flag_del_inner: bool = False) -> None:
-    """One (cell, salt) tile over pre-extracted column slices: run
-    Sherbend over owned + halo features (multi-ring polygons included,
-    matching the reference's RbPolygon ring list,
-    reduce_bend_algorithm.py:322-335), append owned results to ``out``.
-    Caller guarantees deterministic (url, kind) order.
-    ``epsilon=None`` derives the reference's data-dependent epsilon
-    from the tile's own bbox (used by the golden-parity Spark tests);
-    the pipeline pins WORLD_EPS so all tiles share one epsilon.
-    Features deleted by flag_del_outer (reference :1638-1662) are
-    matched back by the index carried in Feature.attrs."""
-    feats = []
-    for i in range(len(urls)):
-        x = np.asarray(xs[i])
-        y = np.asarray(ys[i])
-        rings = _split_rings(x, y, offsets[i])
-        feats.append(RBK.Feature(int(kinds[i]), rings, attrs=i))
-    res = RBK.reduce_bends(feats, diameter_tol, smooth_line=smooth, epsilon=epsilon,
-                           flag_del_outer=flag_del_outer, flag_del_inner=flag_del_inner)
-    n_reduced = int(sum(res.nbr_bend_reduced))
-    for fout in res.features:
-        i = fout.attrs
-        if not owners[i]:
-            continue
-        fxs, fys, foffs = _flatten_rings(fout.rings)
-        out["cell"].append(cell)
-        out["url"].append(urls[i])
-        out["kind"].append(int(kinds[i]))
-        out["xs"].append(fxs)
-        out["ys"].append(fys)
-        out["ring_offsets"].append(foffs)
-        out["n_in"].append(int(len(xs[i])))
-        out["n_out"].append(int(len(fxs)))
-        out["n_pass"].append(res.nbr_pass)
-        out["n_bend_reduced"].append(n_reduced)
-        out["n_line_smooth"].append(int(res.nbr_line_smooth))
-        out["n_hole_del"].append(int(res.nbr_hole_del))
-        out["n_pol_del"].append(int(res.nbr_pol_del))
+def _run_bucket(pdf: pd.DataFrame, kernel) -> pd.DataFrame:
+    """Run ``kernel`` over the (cell, salt) tiles of one bucket.
+    Pandas and NumPy work happens ONCE per bucket: a stable sort by
+    (cell, salt, url, kind), column extraction, ring decoding into views
+    of one coordinate array, and the output built from offsets.
 
-
-def _dp_tile(cell, urls, kinds, xs, ys, offsets, owners,
-             tolerance: float, method: str, out: dict) -> None:
-    """Independent-feature simplification over one tile's slices:
-    the full reference Simplifier semantics (simplify_algorithm.py) —
-    lines AND polygon rings simplified per-ring with the
-    topology-preserving variants, then the invalid-polygon repair pass
-    (escaped interior rings dropped, counted in n_hole_del)."""
-    for i in range(len(urls)):
-        if not owners[i]:
-            continue
-        x = np.asarray(xs[i])
-        y = np.asarray(ys[i])
-        rings = _split_rings(x, y, offsets[i])
-        simp, holes_del = simplify_feature(rings, int(kinds[i]), tolerance,
-                                           method=method)
-        fxs, fys, foffs = _flatten_rings(simp)
-        out["cell"].append(cell)
-        out["url"].append(urls[i])
-        out["kind"].append(int(kinds[i]))
-        out["xs"].append(fxs)
-        out["ys"].append(fys)
-        out["ring_offsets"].append(foffs)
-        out["n_in"].append(int(len(x)))
-        out["n_out"].append(int(len(fxs)))
-        out["n_hole_del"].append(int(holes_del))
-
-
-_OUT_COLS = ("cell", "url", "kind", "xs", "ys", "ring_offsets", "n_in",
-             "n_out", "n_pass", "n_bend_reduced", "n_line_smooth",
-             "n_hole_del", "n_pol_del", "salt")
-
-
-def _kernel_out_pdf(out: dict) -> pd.DataFrame:
-    """Typed empty-safe kernel output (Arrow needs object dtype for the
-    array columns even when a (cell,salt) group owns nothing)."""
-    n = len(out["cell"])
-    zeros = [0] * n
-    return pd.DataFrame({
-        "cell": pd.Series(out["cell"], dtype="int64"),
-        "url": pd.Series(out["url"], dtype="object"),
-        "kind": pd.Series(out["kind"], dtype="int8"),
-        "xs": pd.Series(out["xs"], dtype="object"),
-        "ys": pd.Series(out["ys"], dtype="object"),
-        "ring_offsets": pd.Series(out["ring_offsets"], dtype="object"),
-        "n_in": pd.Series(out["n_in"], dtype="int32"),
-        "n_out": pd.Series(out["n_out"], dtype="int32"),
-        "n_pass": pd.Series(out.get("n_pass") or zeros, dtype="int32"),
-        "n_bend_reduced": pd.Series(out.get("n_bend_reduced") or zeros, dtype="int32"),
-        "n_line_smooth": pd.Series(out.get("n_line_smooth") or zeros, dtype="int32"),
-        "n_hole_del": pd.Series(out.get("n_hole_del") or zeros, dtype="int32"),
-        "n_pol_del": pd.Series(out.get("n_pol_del") or zeros, dtype="int32"),
-        "salt": pd.Series(out.get("salt") or zeros, dtype="int32"),
-    })
-
-
-def _run_bucket(pdf: pd.DataFrame, tile_fn) -> pd.DataFrame:
-    """Run ``tile_fn`` over each (cell, salt) tile of one bucket.
-    Pandas work happens ONCE per bucket (sort + column extraction);
-    tiles are numpy slices — per-tile overhead measured ~6 ms when
-    done with per-tile DataFrames, ~0.1 ms this way."""
-    out = {c: [] for c in _OUT_COLS}
+    ``kernel(bounds, kinds, rings, owners)`` gets the tiles as [lo, hi)
+    row ranges and returns (rows, out_rings, counters): the input rows
+    it emits in output order, their output rings, and per-row lists for
+    any of _COUNTERS (absent ones are 0)."""
     if len(pdf) == 0:
-        return _kernel_out_pdf(out)
+        return _kernel_out_pdf([], {}, {})
     has_salt = "salt" in pdf.columns
     sort_cols = ["cell", "salt", "url", "kind"] if has_salt else ["cell", "url", "kind"]
     pdf = pdf.sort_values(sort_cols, kind="mergesort")
     cells = pdf["cell"].to_numpy()
     salts = pdf["salt"].to_numpy() if has_salt else np.zeros(len(pdf), dtype=np.int64)
-    urls = pdf["url"].to_numpy()
-    kinds = pdf["kind"].to_numpy()
     xs = pdf["xs"].to_numpy()
-    ys = pdf["ys"].to_numpy()
     if "ring_offsets" in pdf.columns:
         offsets = pdf["ring_offsets"].to_numpy()
     else:  # single-ring callers (golden tests, ad-hoc frames)
-        offsets = np.full(len(pdf), None, dtype=object)
-        offsets[:] = [[0]] * len(pdf)
-    owners = pdf["is_owner"].to_numpy()
+        offsets = [[0]] * len(pdf)
     # tile boundaries on the sorted (cell, salt) pairs
     change = np.flatnonzero((cells[1:] != cells[:-1]) | (salts[1:] != salts[:-1])) + 1
-    bounds = np.concatenate([[0], change, [len(pdf)]])
-    for b in range(len(bounds) - 1):
-        lo, hi = bounds[b], bounds[b + 1]
-        before = len(out["cell"])
-        tile_fn(int(cells[lo]), urls[lo:hi], kinds[lo:hi],
-                xs[lo:hi], ys[lo:hi], offsets[lo:hi], owners[lo:hi], out)
-        # tag each emitted row with its (cell, salt) subgroup so the
-        # manifest can aggregate per-subgroup counters exactly
-        out["salt"].extend([int(salts[lo])] * (len(out["cell"]) - before))
-    return _kernel_out_pdf(out)
+    bounds = np.concatenate([[0], change, [len(pdf)]]).tolist()
+    rows, out_rings, counters = kernel(list(zip(bounds[:-1], bounds[1:])),
+                                       pdf["kind"].to_numpy(),
+                                       _bucket_rings(xs, pdf["ys"].to_numpy(), offsets),
+                                       pdf["is_owner"].to_numpy())
+    rows = np.asarray(rows, dtype=np.int64)
+    return _kernel_out_pdf(out_rings, counters, {
+        "cell": cells[rows], "url": pdf["url"].to_numpy()[rows],
+        "kind": pdf["kind"].to_numpy()[rows], "salt": salts[rows],
+        "n_in": np.fromiter(map(len, xs), np.int64, len(xs))[rows]})
+
+
+def _kernel_out_pdf(out_rings: list, counters: dict, cols: dict) -> pd.DataFrame:
+    """Typed empty-safe kernel output (Arrow needs object dtype for the
+    array columns even when a bucket owns nothing).  The coordinate
+    columns are cut from one concatenation of all output rings."""
+    n = len(out_rings)
+    rings = [r for fr in out_rings for r in fr]
+    ring_len = np.fromiter(map(len, rings), np.int64, len(rings))
+    n_rings = np.fromiter(map(len, out_rings), np.int64, n)
+    cum = np.concatenate([[0], np.cumsum(ring_len)])
+    ring_start = cum[:-1]
+    first = np.cumsum(n_rings) - n_rings
+    row_start, row_end = cum[first], cum[first + n_rings]
+    if rings:
+        xy = np.concatenate(rings)
+        x_all, y_all = xy[:, 0].tolist(), xy[:, 1].tolist()
+    else:
+        x_all = y_all = []
+    offs_all = (ring_start - np.repeat(row_start, n_rings)).tolist()
+    spans = list(zip(row_start.tolist(), row_end.tolist()))
+    zeros = np.zeros(n, np.int64)
+    return pd.DataFrame({
+        "cell": pd.Series(cols.get("cell", zeros), dtype="int64"),
+        "url": pd.Series(cols.get("url", []), dtype="object"),
+        "kind": pd.Series(cols.get("kind", zeros), dtype="int8"),
+        "xs": pd.Series([x_all[a:b] for a, b in spans], dtype="object"),
+        "ys": pd.Series([y_all[a:b] for a, b in spans], dtype="object"),
+        "ring_offsets": pd.Series([offs_all[f:f + k] for f, k in
+                                   zip(first.tolist(), n_rings.tolist())], dtype="object"),
+        "n_in": pd.Series(cols.get("n_in", zeros), dtype="int32"),
+        "n_out": pd.Series(row_end - row_start, dtype="int32"),
+        **{c: pd.Series(counters.get(c, zeros), dtype="int32") for c in _COUNTERS},
+        "salt": pd.Series(cols.get("salt", zeros), dtype="int32"),
+    })
 
 
 def _reduce_bend_kernel(pdf: pd.DataFrame, diameter_tol: float, smooth: bool,
                         epsilon=WORLD_EPS, flag_del_outer: bool = False,
                         flag_del_inner: bool = False) -> pd.DataFrame:
-    return _run_bucket(pdf, lambda c, u, k, x, y, r, o, out:
-                       _reduce_bend_tile(c, u, k, x, y, r, o, diameter_tol, smooth, out,
-                                         epsilon=epsilon, flag_del_outer=flag_del_outer,
-                                         flag_del_inner=flag_del_inner))
+    """Sherbend over every tile of one bucket in ONE ``reduce_bend_tiles``
+    call: owned + halo features per tile (multi-ring polygons included,
+    matching the reference's RbPolygon ring list,
+    reduce_bend_algorithm.py:322-335), owned results emitted.
+    ``epsilon=None`` derives the reference's data-dependent epsilon
+    from each tile's own bbox (used by the golden-parity Spark tests);
+    the pipeline pins WORLD_EPS so all tiles share one epsilon.
+    Features deleted by flag_del_outer (reference :1638-1662) are
+    matched back by the row carried in Feature.attrs."""
+    def kernel(bounds, kinds, rings, owners):
+        tiles = [[RBK.Feature(int(kinds[r]), rings[r], attrs=r) for r in range(lo, hi)]
+                 for lo, hi in bounds]
+        results = RBK.reduce_bend_tiles(tiles, diameter_tol, smooth_line=smooth,
+                                        flag_del_outer=flag_del_outer,
+                                        flag_del_inner=flag_del_inner, epsilon=epsilon)
+        rows, out_rings = [], []
+        counters = {c: [] for c in _COUNTERS}
+        for res in results:
+            tile = (res.nbr_pass, int(sum(res.nbr_bend_reduced)), res.nbr_line_smooth,
+                    res.nbr_hole_del, res.nbr_pol_del)
+            for f in res.features:
+                if owners[f.attrs]:
+                    rows.append(f.attrs)
+                    out_rings.append(f.rings)
+                    for c, v in zip(_COUNTERS, tile):
+                        counters[c].append(v)
+        return rows, out_rings, counters
+
+    return _run_bucket(pdf, kernel)
 
 
 def _dp_kernel(pdf: pd.DataFrame, tolerance: float, method: str) -> pd.DataFrame:
-    return _run_bucket(pdf, lambda c, u, k, x, y, r, o, out:
-                       _dp_tile(c, u, k, x, y, r, o, tolerance, method, out))
+    """Independent-feature simplification of a bucket's owned rows: the
+    full reference Simplifier semantics (simplify_algorithm.py) — lines
+    AND polygon rings simplified per-ring with the topology-preserving
+    variants, then the invalid-polygon repair pass (escaped interior
+    rings dropped, counted in n_hole_del)."""
+    def kernel(bounds, kinds, rings, owners):
+        rows = np.flatnonzero(owners.astype(bool)).tolist()
+        out = [simplify_feature(rings[r], int(kinds[r]), tolerance, method=method)
+               for r in rows]
+        return rows, [o[0] for o in out], {"n_hole_del": [o[1] for o in out]}
+
+    return _run_bucket(pdf, kernel)
 
 
 def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
@@ -299,10 +278,10 @@ def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
     One (cell, salt) hash repartition into ``n_buckets`` partitions,
     sorted within each, feeds one mapInPandas: every partition holds
     many whole tiles, and the kernel carves them from the Arrow batches
-    and iterates them as numpy slices — per-task Arrow/pandas overhead
-    is paid per bucket, not per tile.  Tile semantics are unchanged:
-    each (cell, salt) tile is processed independently, owners only are
-    emitted."""
+    and runs each batch's complete tiles in one kernel call — Arrow,
+    pandas and NumPy dispatch overhead is paid per bucket chunk, not per
+    tile.  Tile semantics are unchanged: each (cell, salt) tile is
+    processed independently, owners only are emitted."""
     if kernel == "sherbend":
         def bucket_fn(pdf):
             return _reduce_bend_kernel(pdf, diameter_tol, smooth, epsilon=epsilon,
